@@ -11,10 +11,27 @@ aggregates of the reference (SeqLabel.cs:194-216) generalized per partition.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 N_BUCKETS_DEFAULT = 32
+
+
+def _id_frame(spark, id_type: T.DataType, **cols) -> DataFrame:
+    """A literal frame of node-id columns, each a Python list or an Arrow
+    array, built from a ``pyarrow.Table``. The plan is a LocalRelation, so
+    using the frame runs no job and starts no Python worker; a list-built
+    frame is a Python-RDD scan that pays a worker round trip per use."""
+    at = to_arrow_type(id_type)
+    table = pa.table({k: v if isinstance(v, pa.Array) else pa.array(v, type=at)
+                      for k, v in cols.items()})
+    return spark.createDataFrame(
+        table, T.StructType([T.StructField(k, id_type) for k in cols]))
 
 
 def _key_repartition(df: DataFrame, *cols: str) -> DataFrame:
@@ -514,12 +531,12 @@ def shortest_path_counts(edges: DataFrame, sources, max_hops: int = 12,
         if not sources:
             raise ValueError("shortest_path_counts needs a non-empty "
                              "source set")
-        src_type = dict(edges.dtypes)["src_id"]
-        pivots = spark.createDataFrame([(s,) for s in set(sources)],
-                                       f"src {src_type}")
+        pivots = _id_frame(spark, edges.schema["src_id"].dataType,
+                           src=list(set(sources)))
     frontier = pivots.select("src", F.col("src").alias("node"),
-                             F.lit(1.0).alias("sigma"),
-                             F.lit(0).alias("dist")).localCheckpoint()
+                             F.lit(1.0).alias("sigma"), F.lit(0).alias("dist"))
+    if isinstance(sources, DataFrame):
+        frontier = frontier.localCheckpoint()
     settled = frontier
     # settled stays a lazy union over per-level checkpointed frontiers and
     # the emptiness check rides the checkpoint job via observe — one job per
@@ -1033,6 +1050,56 @@ def _parse_path(expr: str) -> list:
     return alts
 
 
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` is within
+    ``spark.sql.autoBroadcastJoinThreshold`` — the budget under which Spark
+    itself collects a join side through the driver to broadcast it (-1, the
+    off switch, admits nothing; an unknown size estimates as huge)."""
+    jss = df.sparkSession._jsparkSession
+    budget = jss.sessionState().conf().autoBroadcastJoinThreshold()
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() \
+        <= budget
+
+
+def _reach_arrow(node: pa.ChunkedArray, nbr: pa.ChunkedArray,
+                 const) -> pa.Array:
+    """The nodes reachable in one or more hops from ``const`` over the arcs
+    ``node → nbr``, each once. The ids are dictionary-encoded to dense codes
+    and the arcs sorted into a CSR index; each BFS level then gathers the
+    frontier's neighbour ranges with ``np.repeat`` and keeps the unseen
+    ``np.unique`` codes — numpy work per level, no per-edge Python. A NULL
+    id is reached like any other but never expanded, as an equi-join never
+    matches NULL. ``const`` itself is reached only through a cycle."""
+    ids = pa.chunked_array(node.chunks + nbr.chunks,
+                           type=node.type).combine_chunks().dictionary_encode()
+    n_ids = len(ids.dictionary)
+    codes = pc.fill_null(ids.indices, -1).to_numpy()
+    src, dst = codes[:len(node)], codes[len(node):]
+    expand = src >= 0
+    src, dst = src[expand], dst[expand]
+    nbrs = dst[np.argsort(src, kind="stable")]
+    indptr = np.zeros(n_ids + 1, dtype=np.int64)
+    np.cumsum(np.bincount(src, minlength=n_ids), out=indptr[1:])
+    start = -1 if const is None else pc.index(
+        ids.dictionary, pa.scalar(const, type=node.type)).as_py()
+    frontier = np.array([start] if start >= 0 else [], dtype=np.int64)
+    seen = np.zeros(n_ids, dtype=bool)
+    null_hit = False
+    while frontier.size:
+        lo = indptr[frontier]
+        cnt = indptr[frontier + 1] - lo
+        ends = np.cumsum(cnt)
+        hit = nbrs[np.repeat(lo - ends + cnt, cnt) + np.arange(ends[-1])]
+        null_hit = null_hit or bool((hit < 0).any())
+        hit = np.unique(hit[hit >= 0])
+        frontier = hit[~seen[hit]]
+        seen[frontier] = True
+    reached = ids.dictionary.take(pa.array(np.flatnonzero(seen)))
+    if null_hit:
+        reached = pa.concat_arrays([reached, pa.nulls(1, type=reached.type)])
+    return reached
+
+
 def _order_patterns(ests: list, varsets: list) -> list:
     """Greedy selectivity-aware BGP join order: start at the cheapest pattern
     (smallest estimated scan), then repeatedly take the cheapest pattern
@@ -1261,7 +1328,7 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                              "existence checks are not bindings")
 
     spark = edges.sparkSession
-    src_type = dict(edges.dtypes)["src_id"]
+    id_type = edges.schema["src_id"].dataType
     closures: dict = {}     # pred → closure pairs, shared across all terms
     nodes_cache: list = []  # one graph-node-set scan per call, not per * / ?
 
@@ -1315,9 +1382,8 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                                  F.col("n").alias("dst_id"))
         lits = sorted(set(consts), key=repr)
         if lits:
-            base = base.unionByName(spark.createDataFrame(
-                [(c, c) for c in lits],
-                f"src_id {src_type}, dst_id {src_type}"))
+            base = base.unionByName(
+                _id_frame(spark, id_type, src_id=lits, dst_id=lits))
         return base
 
     def compile_step(inv, spec, mod, consts):
@@ -1352,18 +1418,27 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
 
     def reach_pairs(inv, spec, mod, const, const_is_obj):
         """Constant-endpoint closure: ``(?x, p+, C)`` / ``(C, p+, ?x)`` (and
-        the ``*`` forms) answered by directed frontier reachability from the
-        constant instead of materializing the FULL predicate closure and
-        filtering one endpoint afterwards — output-bounded (|reachable| rows
-        of state) where the generic path is closure-bounded (guide §1.2: fix
-        the distributed algorithm before anything else; measured 36.7 s →
-        ~3 s on the 200k-node forest arm). The result is the identical
-        solution SET: transitive_closure returns distinct pairs and frontier
-        BFS settles each node once; ``*`` adds the zero-length (C, C) row
-        exactly like the generic ident arm filtered to C. Falls back to the
-        generic closure (return None) if the frontier has not drained after
-        ``max_rounds`` hops — a pathologically deep chain is exactly what
-        log-round doubling is for."""
+        the ``*`` forms) answered by directed reachability from the constant
+        instead of materializing the FULL predicate closure and filtering one
+        endpoint afterwards — output-bounded (|reachable| rows of state)
+        where the generic path is closure-bounded. The result is the
+        identical solution SET: each reached node once (NULL included), and
+        ``*`` adds the zero-length (C, C) row exactly like the generic ident
+        arm filtered to C.
+
+        Two paths, chosen by the step adjacency's plan-size estimate against
+        ``spark.sql.autoBroadcastJoinThreshold`` (:func:`_fits_broadcast`):
+
+        * within the budget, one job collects the adjacency through Arrow
+          and the BFS runs vectorized on the driver (:func:`_reach_arrow`);
+          the reached set comes back as a LocalRelation, whatever the depth;
+        * over it, a distributed frontier loop: per hop one equi-join of the
+          frontier against the key-partitioned adjacency, a distinct and a
+          null-safe anti-join against the settled nodes, checkpointed with
+          the emptiness check riding the checkpoint. If the frontier has not
+          drained after 128 hops it returns None and the caller falls back
+          to the generic closure — a pathologically deep chain is exactly
+          what log-round doubling is for."""
         step = step_pairs(spec)
         if inv:
             step = step.select(F.col("dst_id").alias("src_id"),
@@ -1376,27 +1451,49 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         else:
             step = step.select(F.col("src_id").alias("node"),
                                F.col("dst_id").alias("nbr"))
+        if _fits_broadcast(step):
+            arcs = step.toArrow()
+            reached = _reach_arrow(arcs["node"], arcs["nbr"], const)
+            if mod == "*":
+                reached = pc.unique(pa.concat_arrays(
+                    [reached, pa.array([const], type=reached.type)]))
+            pairs = _id_frame(spark, id_type, node=reached)
+        else:
+            pairs = reach_distributed(step, const)
+            if pairs is None:
+                return None
+            if mod == "*":
+                pairs = pairs.unionAll(
+                    _id_frame(spark, id_type, node=[const])).distinct()
+        if const_is_obj:
+            return pairs.select(F.col("node").alias("src_id"),
+                                F.lit(const).cast(id_type).alias("dst_id"))
+        return pairs.select(F.lit(const).cast(id_type).alias("src_id"),
+                            F.col("node").alias("dst_id"))
+
+    def reach_distributed(step, const):
         from pyspark.sql import Observation
 
         step = _key_repartition(step, "node").localCheckpoint(eager=False)
-        frontier = spark.createDataFrame([(const,)], f"node {src_type}") \
-            .localCheckpoint()
+        frontier = _id_frame(spark, id_type, node=[const])
         # settled starts EMPTY (not at the source): the constant itself is a
         # solution only when actually re-reached (self-loop / cycle — p+
         # semantics), so the first frontier must not be anti-joined away
         settled = None
-        drained = False
         for it in range(128):
             cand = (step.join(frontier.select("node"), "node")
                     .select(F.col("nbr").alias("node")).distinct())
-            nxt = cand if settled is None \
-                else cand.join(settled, "node", "left_anti")
+            # null-safe: a plain anti-join never matches a NULL key, so a
+            # NULL reached on two hops would be emitted twice
+            nxt = cand if settled is None else cand.alias("c").join(
+                settled.alias("s"),
+                F.col("c.node").eqNullSafe(F.col("s.node")), "left_anti")
             obs = Observation(f"reach_frontier_{id(frontier)}_{it}")
             nxt = nxt.observe(
                 obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
             if int(obs.get["n"] or 0) == 0:
-                drained = True
-                break
+                return settled if settled is not None \
+                    else _id_frame(spark, id_type, node=[])
             settled = nxt if settled is None else settled.unionAll(nxt)
             if it % 16 == 15:
                 # compact the union every 16 hops: deep reachability (up to
@@ -1404,19 +1501,7 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                 # ever-wider union and pay O(hops²) planning
                 settled = settled.localCheckpoint()
             frontier = nxt
-        if not drained:
-            return None
-        pairs = settled if settled is not None \
-            else spark.createDataFrame([], f"node {src_type}")
-        if mod == "*":
-            pairs = pairs.unionAll(
-                spark.createDataFrame([(const,)], f"node {src_type}")) \
-                .distinct()
-        if const_is_obj:
-            return pairs.select(F.col("node").alias("src_id"),
-                                F.lit(const).cast(src_type).alias("dst_id"))
-        return pairs.select(F.lit(const).cast(src_type).alias("src_id"),
-                            F.col("node").alias("dst_id"))
+        return None
 
     def compile_one(p):
         subj, pred_t, obj = p
@@ -1831,14 +1916,11 @@ def bfs_distances(edges: DataFrame, sources: list, max_hops: int = 20,
         raise ValueError("bfs_distances needs a non-empty source set")
     spark = edges.sparkSession
     adj = _undirected_adj(edges, directed)
-    src_type = dict(edges.dtypes)["src_id"]   # ids are opaque — match the type
-    frontier = (spark.createDataFrame([(s,) for s in set(sources)],
-                                      f"node {src_type}")
+    id_type = edges.schema["src_id"].dataType   # ids are opaque — match it
+    frontier = (_id_frame(spark, id_type, node=list(set(sources)))
                 .withColumn("distance", F.lit(0)))
     if parents:
-        frontier = frontier.withColumn("parent",
-                                       F.lit(None).cast(src_type))
-    frontier = frontier.localCheckpoint()
+        frontier = frontier.withColumn("parent", F.lit(None).cast(id_type))
     # settled is a lazy UNION over the per-hop checkpointed frontiers: the
     # anti-join scans the same rows either way, but the union is never
     # re-materialized — the old per-hop settled.unionAll().localCheckpoint()
@@ -2051,11 +2133,9 @@ def shortest_paths(edges: DataFrame, sources: list,
     # keyed on the relaxation join key — one exchange, not one per
     # Bellman-Ford round (guide §2.4)
     arcs = _key_repartition(arcs, "node").localCheckpoint(eager=False)
-    src_type = dict(edges.dtypes)["src_id"]
-    dist = (spark.createDataFrame([(s,) for s in set(sources)],
-                                  f"node {src_type}")
-            .withColumn("cost", F.lit(0).cast("long"))
-            .localCheckpoint())
+    dist = (_id_frame(spark, edges.schema["src_id"].dataType,
+                      node=list(set(sources)))
+            .withColumn("cost", F.lit(0).cast("long")))
     # convergence rides the round's own materializing job (observe during
     # localCheckpoint): the relaxation state is MONOTONE — nodes are only
     # added and min-aggregated costs only decrease — so "nothing improved"

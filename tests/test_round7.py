@@ -229,33 +229,154 @@ def test_closure_computed_once_per_predicate_per_call(spark, monkeypatch):
     assert rows == {(1, 1, 7), (1, 3, 7)}
 
 
-def test_constant_endpoint_closure_equals_generic(spark):
-    """The r8 reach_pairs fast path (constant-endpoint p+ / p* / ^p+) must
-    bind exactly the rows of the generic closure algebra — including cycles
-    (the constant reaches itself), self-loops and the * zero-length arm for
-    a constant that is not even in the graph's node set."""
+def _arrow_edges_df(spark, rows):
+    """Like ``_edges_df``, but built through Arrow: a LocalRelation whose size
+    estimate is known, so a constant-endpoint path can take the driver-side
+    reach (a list-built frame's size is unknown and always too big)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({"src_id": pa.array([r[0] for r in rows], pa.int64()),
+                  "dst_id": pa.array([r[1] for r in rows], pa.int64()),
+                  "pred": pa.array([r[2] for r in rows], pa.string()),
+                  "n_occurrences": pa.array([1] * len(rows), pa.int64())}))
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_constant_endpoint_closure_equals_generic(spark, monkeypatch, path):
+    """The reach_pairs fast path (constant-endpoint p+ / p* / ^p+) must bind
+    exactly the rows of the generic closure algebra on both of its paths —
+    the vectorized driver BFS and the distributed frontier loop (forced by
+    turning the broadcast budget off) — including cycles (the constant
+    reaches itself), self-loops, a NULL endpoint reached on two hops (bound
+    once, never expanded) and the * zero-length arm for a constant that is
+    not even in the graph's node set."""
+    from lingvo_spark_kg.operators import graph
+
+    df = _arrow_edges_df(spark, [(1, 2, "in"), (2, 3, "in"), (3, 1, "in"),
+                                 (5, 5, "in"), (8, 9, "of")])
+    nulls = _arrow_edges_df(spark, [(1, 2, "in"), (2, None, "in"),
+                                    (1, None, "in")])
+    used = []
+    real = graph._reach_arrow
+
+    def spy(*args):
+        used.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(graph, "_reach_arrow", spy)
+
+    def rows(frame, pats):
+        return sorted((tuple(r) for r in
+                       graph.match_pattern(frame, pats).collect()), key=repr)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    budget = spark.conf.get(key)
+    if path == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        # cycle: everything on the 1→2→3→1 loop reaches 3, including 3 itself
+        assert rows(df, [("?x", "in+", 3)]) == [(1,), (2,), (3,)]
+        # forward from a constant subject
+        assert rows(df, [(1, "in+", "?y")]) == [(1,), (2,), (3,)]
+        # self-loop: 5 reaches itself in one hop
+        assert rows(df, [("?x", "in+", 5)]) == [(5,)]
+        # * adds the zero-length arm for the constant itself
+        assert rows(df, [("?x", "of*", 9)]) == [(8,), (9,)]
+        # a constant absent from the graph still matches itself under *
+        assert rows(df, [("?x", "in*", 77)]) == [(77,)]
+        # ...but not under + (no incoming path), nor under ^p+
+        assert rows(df, [("?x", "in+", 77)]) == []
+        assert rows(df, [(77, "^in+", "?y")]) == []
+        # inverse closure from a constant
+        assert rows(df, [("?x", "^of+", 8)]) == [(9,)]
+        # every constant endpoint binds the generic closure's rows for it
+        for frame, consts in ((df, (1, 5, 8)), (nulls, (1, 2))):
+            for mod in "+*":
+                generic = {tuple(r) for r in graph.match_pattern(
+                    frame, [("?s", f"in{mod}", "?o")]).collect()}
+                for c in consts:
+                    assert rows(frame, [(c, f"in{mod}", "?o")]) == sorted(
+                        ((o,) for s, o in generic if s == c), key=repr)
+        # a NULL endpoint reached on two hops binds once
+        assert rows(nulls, [(1, "in+", "?y")]) == [(2,), (None,)]
+        assert rows(nulls, [("?x", "^in+", 1)]) == [(2,), (None,)]
+    finally:
+        spark.conf.set(key, budget)
+    assert bool(used) == (path == "driver")
+
+
+def test_reach_arrow_matches_python_bfs():
+    """The vectorized driver BFS equals a plain set-based BFS on seeded
+    random multigraphs: int and string ids, several Arrow chunks, NULL
+    endpoints (reached once, never expanded), self-loops, and constants
+    inside and outside the graph."""
+    import random
+
+    import pyarrow as pa
+
+    from lingvo_spark_kg.operators.graph import _reach_arrow
+
+    def bfs(arcs, const):
+        adj = {}
+        for s, d in arcs:
+            if s is not None:
+                adj.setdefault(s, []).append(d)
+        seen, frontier = set(), [const]
+        while frontier:
+            nxt = []
+            for n in frontier:
+                for d in adj.get(n, ()):
+                    if d not in seen:
+                        seen.add(d)
+                        if d is not None:
+                            nxt.append(d)
+            frontier = nxt
+        return seen
+
+    rng = random.Random(7)
+    for _ in range(40):
+        n = rng.randrange(1, 30)
+        pool = list(range(n)) + [None]
+        ints = [(rng.choice(pool), rng.choice(pool))
+                for _ in range(rng.randrange(0, 80))]
+        cut = rng.randrange(0, len(ints) + 1)
+        for typ, conv in ((pa.int64(), lambda v: v),
+                          (pa.string(), lambda v: None if v is None
+                           else f"n{v}")):
+            arcs = [(conv(s), conv(d)) for s, d in ints]
+
+            def col(i):
+                vals = pa.array([a[i] for a in arcs], type=typ)
+                return pa.chunked_array([vals[:cut], vals[cut:]], type=typ)
+
+            for c in (0, rng.randrange(n), n + 5):
+                got = _reach_arrow(col(0), col(1), conv(c)).to_pylist()
+                assert len(got) == len(set(got))
+                assert set(got) == bfs(arcs, conv(c))
+
+
+def test_constant_endpoint_path_runs_at_most_three_jobs(spark, tmp_path):
+    """A constant-endpoint p+ over a small parquet graph collects its step
+    adjacency once and expands the frontier on the driver: at most 3 Spark
+    jobs for the whole query, where the per-hop loop runs several per hop."""
     from lingvo_spark_kg.operators.graph import match_pattern
 
-    df = _edges_df(spark, [(1, 2, "in"), (2, 3, "in"), (3, 1, "in"),
-                           (5, 5, "in"), (8, 9, "of")])
-
-    def rows(pats):
-        return sorted(tuple(r) for r in match_pattern(df, pats).collect())
-
-    # cycle: everything on the 1→2→3→1 loop reaches 3, including 3 itself
-    assert rows([("?x", "in+", 3)]) == [(1,), (2,), (3,)]
-    # forward from a constant subject
-    assert rows([(1, "in+", "?y")]) == [(1,), (2,), (3,)]
-    # self-loop: 5 reaches itself in one hop
-    assert rows([("?x", "in+", 5)]) == [(5,)]
-    # * adds the zero-length arm for the constant itself
-    assert rows([("?x", "of*", 9)]) == [(8,), (9,)]
-    # a constant absent from the graph still matches itself under *
-    assert rows([("?x", "in*", 77)]) == [(77,)]
-    # ...but not under + (no incoming path)
-    assert rows([("?x", "in+", 77)]) == []
-    # inverse closure from a constant
-    assert rows([("?x", "^of+", 8)]) == [(9,)]
+    where = str(tmp_path / "edges")
+    _edges_df(spark, [(i, i + 1, "in") for i in range(10)]
+              + [(0, 50, "of")]).write.parquet(where)
+    df = spark.read.parquet(where)
+    sc = spark.sparkContext
+    group = f"reach-jobs-{id(df)}"
+    sc.setJobGroup(group, group)
+    try:
+        got = sorted(r["y"] for r in
+                     match_pattern(df, [(0, "in+", "?y")]).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == list(range(1, 11))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 def test_order_patterns_selectivity_and_connectivity():
