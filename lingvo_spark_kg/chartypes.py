@@ -16,7 +16,6 @@ workers (module import), mirroring the reference's pinned static tables.
 
 from __future__ import annotations
 
-import sys
 import unicodedata
 
 import numpy as np
@@ -252,27 +251,3 @@ def to_upper_invariant(s: str) -> str:
 
 def to_lower_invariant(s: str) -> str:
     return s.translate(_LOWER_TRANS)
-
-
-def ct(ch: str) -> int:
-    cp = ord(ch)
-    return int(CTM[cp]) if cp < BMP else 0
-
-
-def is_dot(ch: str) -> bool:
-    # xlat.cs:223-237 (char.MaxValue also counts as dot; we never index it)
-    return ch == "." or ch == "￿"
-
-
-def is_degree(ch: str) -> bool:
-    return ch in "°º"
-
-
-def is_slash(ch: str) -> bool:
-    return ch in "/\\"
-
-
-def codepoints(s: str) -> np.ndarray:
-    """Vectorized codepoint array for NumPy table lookups (clipped to BMP)."""
-    arr = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-    return np.minimum(arr, BMP - 1)

@@ -41,13 +41,6 @@ def _norm(a):
                               lambda acc, v: acc + v))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    ca, cb = F.col(a), F.col(b)
-    return df.withColumn(
-        out, F.round(_dot(ca, cb) / (_norm(ca) * _norm(cb)), 6)
-    )
-
-
 def cosine_topk_brute(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                       round_digits: int = 6) -> DataFrame:
     """embeddings(vec_id, embedding), queries(query_id, embedding) →
@@ -257,7 +250,10 @@ def lsh_multitable_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
     aggregates — shuffle-free and exactly DuckDB-mirrorable (the oracle anchor);
     'arrow' computes them as one packed NumPy matmul per Arrow batch
     (_bucket_rows_arrow) — the cheaper per-row kernel for the 10^12-doc corpus
-    side. Both feed the identical join/re-rank plan."""
+    side. Both feed the same candidate join; the exact-cosine re-rank is a
+    higher-order-function projection on 'hof' and a NumPy kernel per Arrow
+    batch on 'arrow' (_cosine_rerank_arrow), so cosines may differ in the last
+    ulp before rounding."""
     q = queries.select("query_id", F.col("embedding").alias("q_emb"))
 
     # ONE corpus scan: all n_tables bucket ids computed in a single projection and

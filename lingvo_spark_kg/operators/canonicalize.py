@@ -9,8 +9,8 @@
 
 Components via min-label propagation (the dataframe form of large-star/small-star):
 each iteration joins labels to the symmetric edge list, takes the min neighbor label,
-and ``localCheckpoint``s to cut lineage (north-star: "checkpointed DataFrame
-iterations"); stops when no label changes. Iterations are O(diameter); blocks are
+and is one job of the shared fixpoint driver (``fixpoint.py``: ``localCheckpoint``
+cuts lineage, the changed count rides that job); stops when no label changes. Iterations are O(diameter); blocks are
 star-shaped (hub = block min) so this converges in 2-3 iterations at any scale.
 """
 
@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint, observed
 
 
 def _mention_vertices(links: DataFrame) -> DataFrame:
@@ -104,9 +106,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
     # keyed on the PER-ITERATION join key (sym.dst == labels.v): the edge side
-    # is laid out once here for the loop — repartition("src") was a mismatch
-    # that left every iteration re-shuffling sym by dst. Bare repartition on
-    # purpose: AQE sizes it (≥ default parallelism on big graphs, collapsed
+    # is laid out once here for the loop instead of re-shuffled by dst every
+    # iteration. Bare repartition on purpose: AQE sizes it (≥ default parallelism on big graphs, collapsed
     # for the vocabulary-bounded ones) — graph._key_repartition's rationale.
     sym = sym.repartition("dst").localCheckpoint()
 
@@ -126,66 +127,47 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .localCheckpoint()
         )
 
-    changed: int | None = None  # None = convergence never verified this run
-    for it in range(start_it, max_iter):
-        if on_iteration is not None:
-            on_iteration(it)
+    def propagate(labels):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.v)
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.v == neighbor_min.src, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-                F.col("component").alias("old_component"),
-            )
+        return labels.join(neighbor_min, labels.v == neighbor_min.src, "left").select(
+            "v",
+            F.least(
+                F.col("component"),
+                F.coalesce(F.col("nbr_component"), F.col("component")),
+            ).alias("component"),
+            F.col("component").alias("old_component"),
         )
-        # the convergence check rides the SAME job that materializes the iteration
-        # (Dataset.observe → CollectMetrics during localCheckpoint / parquet write):
-        # zero extra actions per iteration, so convergence is now checked EVERY
-        # iteration — previously a separate limit(1).count() job every 2nd one
-        from pyspark.sql import Observation
 
-        obs = Observation(f"cc_changed_{it}")
-        observed = new_labels.observe(
-            obs,
-            F.sum(F.when(F.col("component") != F.col("old_component"), 1)
-                  .otherwise(0)).alias("n_changed"),
-        )
+    def step(labels, it):
+        if on_iteration is not None:
+            on_iteration(it)
+        return propagate(labels)
+
+    def materialize(new_labels, it):
         if checkpoint_dir and it % checkpoint_every == checkpoint_every - 1:
             # ping-pong so the overwrite never clobbers files the live frame reads
             slot = os.path.join(checkpoint_dir, f"labels_{(it // checkpoint_every) % 2}")
-            observed.write.mode("overwrite").parquet(slot)
+            new_labels.write.mode("overwrite").parquet(slot)
             _write_cc_state(checkpoint_dir, {"iteration": it, "path": slot})
             new_labels = spark.read.parquet(slot)
         else:
-            new_labels = observed.localCheckpoint()
-        labels = new_labels.select("v", "component")
-        changed = int(obs.get["n_changed"] or 0)
-        if changed == 0:
-            break
-    if changed is None:
-        # the loop never ran a convergence check — e.g. resume from a checkpoint
-        # written at max_iter-1 right before the original run raised. Verify the
-        # restored labels directly instead of silently trusting them.
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        changed = (
-            labels.join(neighbor_min, labels.v == neighbor_min.src)
-            .where(F.col("nbr_component") < F.col("component"))
-            .limit(1)
-            .count()
-        )
-    if changed != 0:
+            new_labels = new_labels.localCheckpoint()
+        return new_labels.select("v", "component")
+
+    changed = F.sum(F.when(F.col("component") != F.col("old_component"), 1).otherwise(0))
+    run = fixpoint(labels, step, [changed], max_iter, materialize=materialize,
+                   start=start_it, name="cc")
+    labels, converged = run.state, run.converged
+    if not run.history:
+        # no round ran — e.g. resume from a checkpoint written at max_iter-1
+        # right before the original run raised: verify the restored labels
+        # instead of trusting them
+        converged = observed(propagate(labels), [changed])[1] == (0,)
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge within {max_iter} iterations — "
             "component labels would be silently wrong; raise max_iter"

@@ -19,7 +19,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from .fixpoint import fixpoint, observed, unchanged
+
 N_BUCKETS_DEFAULT = 32
+PAGERANK_CHECKPOINT_EVERY = 5
 
 
 def _id_frame(spark, id_type: T.DataType, **cols) -> DataFrame:
@@ -151,16 +154,6 @@ def partition_metrics(df: DataFrame, stage: str, key: str = "bucket") -> DataFra
     return df.groupBy(F.col(key).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_rows")
     ).select(F.lit(stage).alias("stage"), "bucket", "n_rows")
-
-
-def tag_distribution(tagged: DataFrame) -> DataFrame:
-    """Aggregation A3-style distribution: counts per POS tag over all tokens."""
-    return (
-        tagged.select(F.explode("pos_tags").alias("pos"))
-        .groupBy("pos")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"))
-    )
 
 
 def degree_stats(edges: DataFrame) -> DataFrame:
@@ -537,26 +530,18 @@ def shortest_path_counts(edges: DataFrame, sources, max_hops: int = 12,
                              F.lit(1.0).alias("sigma"), F.lit(0).alias("dist"))
     if isinstance(sources, DataFrame):
         frontier = frontier.localCheckpoint()
-    settled = frontier
-    # settled stays a lazy union over per-level checkpointed frontiers and
-    # the emptiness check rides the checkpoint job via observe — one job per
-    # level instead of three (bfs_distances' discipline; guide §2.4)
-    from pyspark.sql import Observation
 
-    for h in range(1, max_hops + 1):
-        nxt = (adj.join(frontier.select("node", "src", "sigma"), "node")
-               .groupBy("src", F.col("nbr").alias("node"))
-               .agg(F.sum("sigma").alias("sigma"))
-               .join(settled.select("src", "node"), ["src", "node"],
-                     "left_anti")
-               .withColumn("dist", F.lit(h))
-               .select("src", "node", "sigma", "dist"))
-        obs = Observation(f"spc_frontier_{h}")
-        frontier = nxt.observe(
-            obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        if int(obs.get["n"] or 0) == 0:
-            break
-        settled = settled.unionAll(frontier)
+    def expand(frontier, settled, it):
+        return (adj.join(frontier.select("node", "src", "sigma"), "node")
+                .groupBy("src", F.col("nbr").alias("node"))
+                .agg(F.sum("sigma").alias("sigma"))
+                .join(settled.select("src", "node"), ["src", "node"],
+                      "left_anti")
+                .withColumn("dist", F.lit(it + 1))
+                .select("src", "node", "sigma", "dist"))
+
+    settled = fixpoint(frontier, expand, None, max_hops, settled=frontier,
+                       name="spc").settled
     return settled.select("src", F.col("node").alias("node_id"),
                           F.col("dist").alias("distance"),
                           F.col("sigma").alias("n_paths"))
@@ -672,7 +657,8 @@ def neighborhood_function(edges: DataFrame, max_hops: int = 8,
     Per hop: every node's ball sketch is the HLL union of its own sketch and
     its neighbors' previous sketches — one equi-join of the (node, sketch)
     frame against the edge list + one ``hll_union_agg`` (map-side-combinable,
-    the whole point of sketches) + one 1-row global estimate sum. The sketch
+    the whole point of sketches); the global estimate sum rides the hop's
+    checkpoint job (operators/fixpoint.py). The sketch
     frame is localCheckpoint-ed per hop (node-bounded rows, lineage cut like
     every iterative operator here). Early exit when N(h) grows by less than
     ``converge_ratio`` (diameter reached); HLL is deterministic for fixed
@@ -687,29 +673,28 @@ def neighborhood_function(edges: DataFrame, max_hops: int = 8,
     # keyed on the per-hop sketch join key (guide §2.4)
     sym = _key_repartition(sym, "nbr").localCheckpoint(eager=False)
     spark = edges.sparkSession
-    balls = (sym.select("node").distinct()
-             .groupBy("node")
-             .agg(F.hll_sketch_agg(F.col("node").cast("string"),
-                                   F.lit(lg_config_k)).alias("sk"))
-             .localCheckpoint())
-    rows = [(0, int(balls.agg(
-        F.sum(F.hll_sketch_estimate("sk"))).collect()[0][0] or 0))]
-    for h in range(1, max_hops + 1):
+    n_pairs = [F.sum(F.hll_sketch_estimate("sk"))]
+    balls, n0 = observed(sym.select("node").distinct()
+                         .groupBy("node")
+                         .agg(F.hll_sketch_agg(F.col("node").cast("string"),
+                                               F.lit(lg_config_k)).alias("sk")),
+                         n_pairs)
+
+    def step(balls, it):
         nbr_sk = (sym.join(balls.select(F.col("node").alias("nbr"),
                                         F.col("sk").alias("nbr_sk")), "nbr")
                   .groupBy("node")
                   .agg(F.hll_union_agg("nbr_sk").alias("merged")))
-        balls = (balls.join(nbr_sk, "node", "left")
-                 .select("node",
-                         F.when(F.col("merged").isNull(), F.col("sk"))
-                         .otherwise(F.hll_union("sk", "merged")).alias("sk"))
-                 .localCheckpoint())
-        n_h = int(balls.agg(
-            F.sum(F.hll_sketch_estimate("sk"))).collect()[0][0] or 0)
-        rows.append((h, n_h))
-        if n_h <= rows[-2][1] * converge_ratio:
-            break
-    return spark.createDataFrame(rows, "hop int, est_pairs long")
+        return (balls.join(nbr_sk, "node", "left")
+                .select("node",
+                        F.when(F.col("merged").isNull(), F.col("sk"))
+                        .otherwise(F.hll_union("sk", "merged")).alias("sk")))
+
+    run = fixpoint(balls, step, n_pairs, max_hops, prev=n0, name="hyperanf",
+                   until=lambda cur, prev: cur[0] <= prev[0] * converge_ratio)
+    return spark.createDataFrame(
+        [(h, int(n)) for h, (n,) in enumerate([n0] + run.history)],
+        "hop int, est_pairs long")
 
 
 def neighbor_similarity(edges: DataFrame, min_common: int = 1,
@@ -787,8 +772,8 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     make single window partitions large (external sort handles them; the
     AQE-skew caveat of linking applies). Iteration output is localCheckpoint-ed
     every iteration (node-bounded rows), so lineage never replays the chain;
-    convergence = zero changed values (one node-bounded count per iteration,
-    the CC convergence discipline)."""
+    convergence = Σ values unchanged, observed on the iteration's own job
+    (operators/fixpoint.py); ``max_iter`` is a budget (NotConvergedWarning)."""
     from pyspark.sql import Window
 
     und = (edges.select(F.least("src_id", "dst_id").alias("u"),
@@ -799,30 +784,23 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     # keyed on the per-iteration join key — one exchange, not one per
     # h-index round (guide §2.4)
     nbrs = _key_repartition(nbrs, "nbr").localCheckpoint(eager=False)
-    from pyspark.sql import Observation
-
-    cur = (nbrs.groupBy("node")
-           .agg(F.count(F.lit(1)).cast("long").alias("c"))
-           .localCheckpoint())
-    prev_sum = int(cur.agg(F.sum("c")).collect()[0][0] or 0)
+    # the h-index sequence is MONOTONE non-increasing per node over a fixed
+    # node set, so "no value changed" ⟺ Σ c unchanged
+    total = [F.sum("c")]
+    cur, prev = observed(nbrs.groupBy("node")
+                         .agg(F.count(F.lit(1)).cast("long").alias("c")), total)
     w = Window.partitionBy("node").orderBy(F.desc("nbr_c"), F.asc("nbr"))
-    for it in range(max_iter):
+
+    def step(cur, it):
         vals = cur.select(F.col("node").alias("nbr"), F.col("c").alias("nbr_c"))
-        joined = nbrs.join(vals, "nbr")
-        # convergence rides the iteration's own materializing job (observe):
-        # the h-index sequence is MONOTONE non-increasing per node over a
-        # fixed node set, so "no value changed" ⟺ Σ c unchanged — the
-        # previous per-iteration changed-join is gone (guide §2.4)
-        nxt = (joined.withColumn("rn", F.row_number().over(w))
-               .groupBy("node")
-               .agg(F.max(F.least(F.col("rn"), F.col("nbr_c")))
-                    .cast("long").alias("c")))
-        obs = Observation(f"core_sum_{it}")
-        cur = nxt.observe(obs, F.sum("c").alias("s")).localCheckpoint()
-        cur_sum = int(obs.get["s"] or 0)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+        return (nbrs.join(vals, "nbr")
+                .withColumn("rn", F.row_number().over(w))
+                .groupBy("node")
+                .agg(F.max(F.least(F.col("rn"), F.col("nbr_c")))
+                     .cast("long").alias("c")))
+
+    cur = fixpoint(cur, step, total, max_iter, until=unchanged, prev=prev,
+                   budget="max_iter", name="coreness").state
     return cur.select(F.col("node").alias("node_id"),
                       F.col("c").alias("coreness"))
 
@@ -853,7 +831,6 @@ def skip_gram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
 
 
 def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
-             checkpoint_every: int = 5,
              weight_col: str = "n_occurrences",
              sources: list | None = None) -> DataFrame:
     """Weighted PageRank over the materialized edges table → (node_id, rank):
@@ -871,7 +848,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
     iterations; each iteration is one equi-join on node id plus one hash
     aggregate — the plan AQE handles like any keyed join (skewed hub nodes ride
     the same skew-join machinery as linking). Rank lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` iterations — the same
+    ``localCheckpoint`` every ``PAGERANK_CHECKPOINT_EVERY`` iterations — the same
     ping-pong discipline as the iterative connected components
     (canonicalize.py), without which 20 chained iterations compound into an
     exponentially deep plan. The only driver-side values are the node count and
@@ -917,11 +894,10 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
     if sources is not None:
         if not sources:
             raise ValueError("sources must be a non-empty list (or None)")
-        spark = edges.sparkSession
         t = 1.0 / len(sources)
-        tele_df = F.broadcast(spark.createDataFrame(
-            [(s,) for s in set(sources)],
-            nodes.schema).withColumn("t", F.lit(t)))
+        tele_df = F.broadcast(_id_frame(
+            edges.sparkSession, nodes.schema["node_id"].dataType,
+            node_id=list(set(sources))).withColumn("t", F.lit(t)))
         tele = (nodes.join(tele_df, "node_id", "left")
                 .select("node_id", F.coalesce(F.col("t"), F.lit(0.0)).alias("t"))
                 .localCheckpoint(eager=True))
@@ -943,7 +919,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
             ranks = nxt.select("node_id",
                                (F.lit(1.0 - damping) * F.col("t")
                                 + F.lit(damping) * acc).alias("rank"))
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
+            if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
                 ranks = ranks.localCheckpoint(eager=True)
         return ranks
     base = (1.0 - damping) / n_nodes
@@ -962,7 +938,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
             acc = acc + F.col("dmass") / F.lit(float(n_nodes))
         ranks = nxt.select("node_id",
                            (F.lit(base) + F.lit(damping) * acc).alias("rank"))
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -1472,36 +1448,24 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                             F.col("node").alias("dst_id"))
 
     def reach_distributed(step, const):
-        from pyspark.sql import Observation
-
         step = _key_repartition(step, "node").localCheckpoint(eager=False)
-        frontier = _id_frame(spark, id_type, node=[const])
-        # settled starts EMPTY (not at the source): the constant itself is a
-        # solution only when actually re-reached (self-loop / cycle — p+
-        # semantics), so the first frontier must not be anti-joined away
-        settled = None
-        for it in range(128):
+
+        def expand(frontier, settled, it):
             cand = (step.join(frontier.select("node"), "node")
                     .select(F.col("nbr").alias("node")).distinct())
             # null-safe: a plain anti-join never matches a NULL key, so a
             # NULL reached on two hops would be emitted twice
-            nxt = cand if settled is None else cand.alias("c").join(
+            return cand.alias("c").join(
                 settled.alias("s"),
                 F.col("c.node").eqNullSafe(F.col("s.node")), "left_anti")
-            obs = Observation(f"reach_frontier_{id(frontier)}_{it}")
-            nxt = nxt.observe(
-                obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-            if int(obs.get["n"] or 0) == 0:
-                return settled if settled is not None \
-                    else _id_frame(spark, id_type, node=[])
-            settled = nxt if settled is None else settled.unionAll(nxt)
-            if it % 16 == 15:
-                # compact the union every 16 hops: deep reachability (up to
-                # 128 hops here) would otherwise anti-join against an
-                # ever-wider union and pay O(hops²) planning
-                settled = settled.localCheckpoint()
-            frontier = nxt
-        return None
+
+        # settled starts EMPTY (not at the source): the constant itself is a
+        # solution only when actually re-reached (self-loop / cycle — p+
+        # semantics), so the first frontier must not be anti-joined away
+        run = fixpoint(_id_frame(spark, id_type, node=[const]), expand, None,
+                       128, settled=_id_frame(spark, id_type, node=[]),
+                       name="reach")
+        return run.settled if run.converged else None
 
     def compile_one(p):
         subj, pred_t, obj = p
@@ -1821,7 +1785,8 @@ def label_propagation(edges: DataFrame, max_iter: int = 10,
     bipartite structure; the self-vote breaks the symmetry) and ties break to
     the SMALLEST label — the whole update is exact integer voting, so runs are
     bit-reproducible across partitionings and engines (no random tie-breaks, no
-    floats). Converges when no label changes or at ``max_iter``.
+    floats). Converges when no label changes; ``max_iter`` is a budget
+    (NotConvergedWarning when it runs out first, operators/fixpoint.py).
 
     Per iteration: one equi-join of the neighbor table against the node-bounded
     label frame, one (node, label) count (map-side combinable), one per-node
@@ -1856,9 +1821,8 @@ def label_propagation(edges: DataFrame, max_iter: int = 10,
     labels = (nbrs.select("node").distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint())
-    from pyspark.sql import Observation
 
-    for it in range(max_iter):
+    def step(labels, it):
         nbr_labels = nbrs.join(
             labels.select(F.col("node").alias("nbr"), "label"), "nbr")
         votes = (nbr_labels.select("node", "label", "w")
@@ -1866,24 +1830,21 @@ def label_propagation(edges: DataFrame, max_iter: int = 10,
                                          F.lit(1).cast("long").alias("w")))
                  .groupBy("node", "label")
                  .agg(F.sum("w").alias("n")))
-        # the changed count rides the SAME job that materializes the
-        # iteration (observe → CollectMetrics during localCheckpoint, the CC
-        # discipline): the old label joins in node-keyed BEFORE the
-        # checkpoint, so the previous separate join-and-count action per
-        # iteration is gone (guide §2.4)
-        nxt = (votes.groupBy("node")
-               .agg(F.min(F.struct(F.negate(F.col("n")).alias("neg_n"),
-                                   F.col("label").alias("label"))).alias("top"))
-               .select("node", F.col("top.label").alias("label"))
-               .join(labels.select("node",
-                                   F.col("label").alias("__old")), "node"))
-        obs = Observation(f"lpa_changed_{it}")
-        observed = nxt.observe(
-            obs, F.sum(F.when(F.col("label") != F.col("__old"), 1)
-                       .otherwise(0)).alias("n_changed"))
-        labels = observed.select("node", "label").localCheckpoint()
-        if int(obs.get["n_changed"] or 0) == 0:
-            break
+        # the round's input label joins in node-keyed, so the changed count
+        # is an aggregate over the round's own frame
+        return (votes.groupBy("node")
+                .agg(F.min(F.struct(F.negate(F.col("n")).alias("neg_n"),
+                                    F.col("label").alias("label"))).alias("top"))
+                .select("node", F.col("top.label").alias("label"))
+                .join(labels.select("node",
+                                    F.col("label").alias("__old")), "node"))
+
+    changed = F.sum(F.when(F.col("label") != F.col("__old"), 1).otherwise(0))
+    labels = fixpoint(
+        labels, step, [changed], max_iter, budget="max_iter",
+        name="label_propagation",
+        materialize=lambda df, it: df.select("node", "label").localCheckpoint(),
+    ).state
     return labels.select(F.col("node").alias("node_id"),
                          F.col("label").alias("community"))
 
@@ -1921,15 +1882,8 @@ def bfs_distances(edges: DataFrame, sources: list, max_hops: int = 20,
                 .withColumn("distance", F.lit(0)))
     if parents:
         frontier = frontier.withColumn("parent", F.lit(None).cast(id_type))
-    # settled is a lazy UNION over the per-hop checkpointed frontiers: the
-    # anti-join scans the same rows either way, but the union is never
-    # re-materialized — the old per-hop settled.unionAll().localCheckpoint()
-    # rewrote O(|reached|) rows every hop (guide §2.4). The frontier
-    # emptiness check rides the checkpoint job via observe (one job per hop).
-    from pyspark.sql import Observation
 
-    settled = frontier
-    for h in range(1, max_hops + 1):
+    def expand(frontier, settled, it):
         reached = adj.join(frontier.select("node"), "node")
         if parents:
             nxt = (reached.groupBy(F.col("nbr").alias("child"))
@@ -1938,15 +1892,11 @@ def bfs_distances(edges: DataFrame, sources: list, max_hops: int = 20,
         else:
             nxt = reached.select(F.col("nbr").alias("node")).distinct()
         nxt = (nxt.join(settled.select("node"), "node", "left_anti")
-               .withColumn("distance", F.lit(h)))
-        if parents:
-            nxt = nxt.select("node", "distance", "parent")
-        obs = Observation(f"bfs_frontier_{h}")
-        frontier = nxt.observe(
-            obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        if int(obs.get["n"] or 0) == 0:
-            break
-        settled = settled.unionAll(frontier)
+               .withColumn("distance", F.lit(it + 1)))
+        return nxt.select("node", "distance", "parent") if parents else nxt
+
+    settled = fixpoint(frontier, expand, None, max_hops, settled=frontier,
+                       name="bfs").settled
     cols = ["distance", "parent"] if parents else ["distance"]
     return settled.select(F.col("node").alias("node_id"), *cols)
 
@@ -2057,22 +2007,14 @@ def transitive_closure(edges: DataFrame, pred: str | None = None,
     # self-loop edges STAY: p+ must contain p (a (v, p, v) edge means v
     # reaches v in one hop) — dropping them would make the transitive pattern
     # match fewer pairs than the single-hop pattern, which SPARQL forbids
-    from pyspark.sql import Observation
+    # the state is MONOTONE — pairs are only ever added (unionAll keeps every
+    # old key) and min-aggregated distances only ever decrease — so "no new
+    # pair and no improved distance" ⟺ (row count, Σ distance) both unchanged
+    size = [F.count(F.lit(1)), F.sum("distance")]
+    paths, prev = observed(base.select("src_id", "dst_id").distinct()
+                           .withColumn("distance", F.lit(1).cast("long")), size)
 
-    paths = (base.select("src_id", "dst_id").distinct()
-             .withColumn("distance", F.lit(1).cast("long"))
-             .localCheckpoint())
-    # convergence rides the round's OWN materializing job (Dataset.observe →
-    # CollectMetrics during localCheckpoint, the CC discipline): the state is
-    # MONOTONE — pairs are only ever added (unionAll keeps every old key) and
-    # min-aggregated distances only ever decrease — so "no new pair and no
-    # improved distance" ⟺ (row count, Σ distance) both unchanged. The
-    # previous implementation re-joined the FULL closure against the previous
-    # round's closure just to count changes: one extra closure-sized join per
-    # round, pure overhead (guide §2.4).
-    prev = paths.agg(F.count(F.lit(1)), F.sum("distance")).collect()[0]
-    prev = (int(prev[0]), int(prev[1] or 0))
-    for it in range(max_iter):
+    def step(paths, it):
         hop = paths.select(F.col("src_id").alias("mid"),
                            F.col("dst_id"),
                            F.col("distance").alias("d2"))
@@ -2081,18 +2023,12 @@ def transitive_closure(edges: DataFrame, pred: str | None = None,
                  .join(hop, "mid")
                  .select("src_id", "dst_id",
                          (F.col("d1") + F.col("d2")).alias("distance")))
-        nxt = (paths.unionAll(grown)
-               .groupBy("src_id", "dst_id")
-               .agg(F.min("distance").alias("distance")))
-        obs = Observation(f"tc_state_{it}")
-        paths = nxt.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.sum("distance").alias("s")).localCheckpoint()
-        cur = (int(obs.get["n"] or 0), int(obs.get["s"] or 0))
-        if cur == prev:
-            break
-        prev = cur
-    return paths
+        return (paths.unionAll(grown)
+                .groupBy("src_id", "dst_id")
+                .agg(F.min("distance").alias("distance")))
+
+    return fixpoint(paths, step, size, max_iter, until=unchanged, prev=prev,
+                    budget="max_iter", name="transitive_closure").state
 
 
 def shortest_paths(edges: DataFrame, sources: list,
@@ -2110,10 +2046,11 @@ def shortest_paths(edges: DataFrame, sources: list,
 
     Bellman-Ford as iterated min-plus relaxation: per round, one equi-join of
     the current (node-bounded) cost frame against the adjacency list, one
-    min aggregate merging relaxed candidates with current costs, one changed
-    count — converges in ≤ (longest shortest path in edges) rounds, early-exits
-    when a round improves nothing, and the frame is localCheckpoint-ed per
-    round (the CC lineage discipline). Unlike Dijkstra there is no priority
+    min aggregate merging relaxed candidates with current costs — converges in
+    ≤ (longest shortest path in edges) rounds, early-exits when a round
+    improves nothing, and the frame is localCheckpoint-ed per round; a
+    ``max_iter`` that runs out first warns (NotConvergedWarning) because the
+    returned costs are then upper bounds. Unlike Dijkstra there is no priority
     queue to serialize through — every relaxation in a round runs data-parallel,
     which is the standard distributed trade (more rounds, each embarrassingly
     parallel)."""
@@ -2136,39 +2073,20 @@ def shortest_paths(edges: DataFrame, sources: list,
     dist = (_id_frame(spark, edges.schema["src_id"].dataType,
                       node=list(set(sources)))
             .withColumn("cost", F.lit(0).cast("long")))
-    # convergence rides the round's own materializing job (observe during
-    # localCheckpoint): the relaxation state is MONOTONE — nodes are only
-    # added and min-aggregated costs only decrease — so "nothing improved"
-    # ⟺ (row count, Σ cost) both unchanged. Replaces the per-round
-    # state-sized changed-join (guide §2.4).
-    from pyspark.sql import Observation
 
-    prev = (len(set(sources)), 0)
-    changed = 0
-    for it in range(max_iter):
+    def step(dist, it):
         relaxed = (arcs.join(dist, "node")
                    .select(F.col("nbr").alias("node"),
                            (F.col("cost") + F.col("w")).alias("cost")))
-        nxt = (dist.unionAll(relaxed)
-               .groupBy("node").agg(F.min("cost").alias("cost")))
-        obs = Observation(f"sp_state_{it}")
-        dist = nxt.observe(obs, F.count(F.lit(1)).alias("n"),
-                           F.sum("cost").alias("s")).localCheckpoint()
-        cur = (int(obs.get["n"] or 0), int(obs.get["s"] or 0))
-        changed = 0 if cur == prev else 1
-        prev = cur
-        if changed == 0:
-            break
-    if changed:
-        # the last round still improved something: a cheaper path longer than
-        # max_iter edges may exist — returning silently would present a
-        # truncated relaxation as the minimum
-        import warnings
+        return (dist.unionAll(relaxed)
+                .groupBy("node").agg(F.min("cost").alias("cost")))
 
-        warnings.warn(
-            f"shortest_paths stopped at max_iter={max_iter} while costs were "
-            "still improving — returned costs are upper bounds; raise max_iter",
-            stacklevel=2)
+    # the relaxation state is MONOTONE — nodes are only added and
+    # min-aggregated costs only decrease — so "nothing improved" ⟺ (row
+    # count, Σ cost) both unchanged; a truncated run returns upper bounds
+    dist = fixpoint(dist, step, [F.count(F.lit(1)), F.sum("cost")], max_iter,
+                    until=unchanged, prev=(len(set(sources)), 0),
+                    budget="max_iter", name="shortest_paths").state
     return dist.select(F.col("node").alias("node_id"), "cost")
 
 
@@ -2413,56 +2331,42 @@ def materialize_rules(edges: DataFrame, rules: list, max_rounds: int = 30,
             out = out.unionByName(fr)
         return out
 
-    base = edges.select(*key3).distinct().localCheckpoint()
-    known, delta = base, base
-    # round 1: pre-delta state is empty. An EMPTY LocalRelation (not
-    # base.limit(0) over the checkpointed RDD): PropagateEmptyRelation folds
-    # every join touching it away at plan time, and the i ≥ 1 delta
-    # positions are skipped outright below — otherwise round 1 paid k-1 dead
-    # full-store scans + shuffles per rule whose result is empty by
-    # construction (guide §2.4: remove work the optimizer cannot see through)
     spark = edges.sparkSession
-    old = spark.createDataFrame([], base.schema)
-    old_is_empty = True
-    converged = False
-    for _ in range(max_rounds):
+    base = edges.select(*key3).distinct().localCheckpoint()
+    old = None   # the pre-delta state: the store as the previous round saw it
+
+    def step(delta, known, it):
+        nonlocal old
         cands = []
         for body, heads in norm:
             k = len(body)
-            for i in range(k):
-                if old_is_empty and i > 0:
-                    continue     # a body with an atom on the empty pre-delta
-                    # state derives nothing — identical result, zero cost
+            # round 1's pre-delta state is empty, so a body with an atom on
+            # it (i ≥ 1) derives nothing: skipped outright
+            for i in range(k if it else 1):
                 frames = [old] * i + [delta] + [known] * (k - 1 - i)
                 cands.append(inst_heads(eval_body(frames, body), heads))
+        old = known
         cand = cands[0]
         for fr in cands[1:]:
             cand = cand.unionByName(fr)
-        from pyspark.sql import Observation
+        return cand.distinct().join(known, list(key3), "left_anti")
 
-        obs = Observation()
-        new_delta = (cand.distinct()
-                     .join(known, list(key3), "left_anti")
-                     .observe(obs, F.count(F.lit(1)).alias("n"))
-                     .localCheckpoint())
-        # emptiness rides the checkpoint job (observe — the CC discipline);
-        # known stays a LAZY union over the per-round checkpointed deltas:
-        # the old unionAll().localCheckpoint() re-wrote the whole store every
-        # round, O(store) per round of pure copy (guide §2.4)
-        if int(obs.get["n"] or 0) == 0:
-            converged = True
-            break
-        old = known
-        old_is_empty = False
-        known = known.unionAll(new_delta)
-        delta = new_delta
-    if not converged:
-        import warnings
+    def materialize(df, it):
+        # a checkpoint keeps the optimizer's size estimate of the plan it
+        # cut, and without column statistics an inner join estimates the
+        # PRODUCT of its inputs: each round joins the last delta against the
+        # earlier store, so the inherited estimates multiply round over round
+        # until, past ~20 rounds, they run to millions of digits and planning
+        # stalls in BigInt arithmetic. Re-wrapping the checkpointed rows as a
+        # plain RDD relation resets the estimate to the session default.
+        ckpt = df.localCheckpoint()
+        return DataFrame(spark._jsparkSession.internalCreateDataFrame(
+            ckpt._jdf.queryExecution().toRdd(), ckpt._jdf.schema(), False),
+            spark)
 
-        warnings.warn(
-            f"materialize_rules stopped at max_rounds={max_rounds} with a "
-            "non-empty delta — the returned store is NOT saturated; raise "
-            "max_rounds (the fixpoint is finite)", stacklevel=2)
+    known = fixpoint(base, step, None, max_rounds, settled=base,
+                     materialize=materialize, budget="max_rounds",
+                     name="materialize_rules").settled
     if include_base:
         return known
     return known.join(base, list(key3), "left_anti")
@@ -2498,7 +2402,8 @@ def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
              .withColumn("prev_est", F.hll_sketch_estimate("sk"))
              .withColumn("acc", F.lit(0.0))
              .localCheckpoint())
-    for h in range(1, max_hops + 1):
+
+    def step(state, it):
         nbr_sk = (sym.join(state.select(F.col("node").alias("nbr"),
                                         F.col("sk").alias("nbr_sk")), "nbr")
                   .groupBy("node")
@@ -2508,19 +2413,18 @@ def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
                          F.when(F.col("merged").isNull(), F.col("sk"))
                          .otherwise(F.hll_union("sk", "merged")).alias("sk"),
                          "prev_est", "acc"))
-        state = (state.withColumn("est", F.hll_sketch_estimate("sk"))
-                 .withColumn("shell",
-                             F.greatest(F.col("est") - F.col("prev_est"),
-                                        F.lit(0.0)))
-                 .select("node", "sk", F.col("est").alias("prev_est"),
-                         (F.col("acc") + F.col("shell") / F.lit(float(h)))
-                         .alias("acc"), "shell")
-                 .localCheckpoint())
-        # saturation = every ball stopped growing (diameter reached); one
-        # node-bounded aggregate riding the checkpointed frame
-        if (state.agg(F.sum("shell")).collect()[0][0] or 0.0) <= 0.0:
-            break
         # the next hop's projections select columns explicitly, so the shell
         # column simply falls out of the plan
+        return (state.withColumn("est", F.hll_sketch_estimate("sk"))
+                .withColumn("shell",
+                            F.greatest(F.col("est") - F.col("prev_est"),
+                                       F.lit(0.0)))
+                .select("node", "sk", F.col("est").alias("prev_est"),
+                        (F.col("acc") + F.col("shell") / F.lit(float(it + 1)))
+                        .alias("acc"), "shell"))
+
+    # saturation = every ball stopped growing (diameter reached)
+    state = fixpoint(state, step, [F.sum("shell")], max_hops,
+                     name="harmonic").state
     return state.select(F.col("node").alias("node_id"),
                         F.col("acc").alias("centrality"))

@@ -65,18 +65,3 @@ def macro_f1(prf: DataFrame, exclude: tuple[str, ...] = SPECIAL_LABELS) -> DataF
             F.count(F.lit(1)).alias("n_labels"),
         )
     )
-
-
-def triple_prf(hyp_triples: DataFrame, ref_triples: DataFrame) -> dict:
-    """Exact-match triple precision/recall per BASELINE.md: match on
-    (doc_id, sent-position, subj, pred, obj)."""
-    keys = ["doc_id", "span_idx", "sent_idx", "subj", "pred", "obj"]
-    h = hyp_triples.select(keys).dropDuplicates(keys)
-    r = ref_triples.select(keys).dropDuplicates(keys)
-    n_h = h.count()
-    n_r = r.count()
-    n_both = h.join(r, keys, "inner").count()
-    p = n_both / n_h if n_h else 0.0
-    rec = n_both / n_r if n_r else 0.0
-    return {"n_hyp": n_h, "n_ref": n_r, "n_both": n_both,
-            "precision": round(p, 6), "recall": round(rec, 6)}
