@@ -1,4 +1,4 @@
-"""Canonicalization: iterative connected components over the mention-similarity graph.
+"""Canonicalization: connected components over the mention-similarity graph.
 
 [KG-new] operators J3/J4 (SURVEY.md §2.6). Vertices are mention keys
 ("m:<type>:<norm>") and linked entity anchors ("e:<entity_id>"). Edges:
@@ -7,19 +7,30 @@
    (type, last token of the normalized surface), which connects "сергей козлов",
    "козлов", "с . козлов" without an O(n²) cross join.
 
-Components via min-label propagation (the dataframe form of large-star/small-star):
-each iteration joins labels to the symmetric edge list, takes the min neighbor label,
-and is one job of the shared fixpoint driver (``fixpoint.py``: ``localCheckpoint``
-cuts lineage, the changed count rides that job); stops when no label changes. Iterations are O(diameter); blocks are
-star-shaped (hub = block min) so this converges in 2-3 iterations at any scale.
+Components label each vertex with the min vertex id it reaches, on one of two
+paths chosen by the edge frame's plan-size estimate against
+``spark.sql.autoBroadcastJoinThreshold`` (``smallgraph.fits_broadcast``):
+
+* within the budget, one Arrow collect and a vectorized numpy min-label kernel
+  on the driver (``_components_arrow``), returned as a LocalRelation;
+* over it, min-label propagation in Spark (the dataframe form of
+  large-star/small-star): each iteration joins labels to the symmetric edge
+  list, takes the min neighbor label, and is one job of the shared fixpoint
+  driver (``fixpoint.py``: ``localCheckpoint`` cuts lineage, the changed count
+  rides that job); stops when no label changes. Iterations are O(diameter);
+  blocks are star-shaped (hub = block min) so this converges in 2-3
+  iterations at any scale.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint, observed
+from .smallgraph import encode, fits_broadcast, id_frame
 
 
 def _mention_vertices(links: DataFrame) -> DataFrame:
@@ -30,7 +41,8 @@ def _mention_vertices(links: DataFrame) -> DataFrame:
 
 
 def build_edges(links: DataFrame) -> DataFrame:
-    """Symmetric-ready (src, dst) edge list (deduplicated, J5)."""
+    """(src, dst) edge list. Not deduplicated: both CC paths ignore repeated
+    edges, and the Spark loop deduplicates its symmetric list anyway."""
     m = _mention_vertices(links)
     e_link = (
         m.where(F.col("entity_id").isNotNull())
@@ -55,7 +67,7 @@ def build_edges(links: DataFrame) -> DataFrame:
         .where((F.col("bn") > 1) & (F.col("v") != F.col("hub")))
         .select(F.col("v").alias("src"), F.col("hub").alias("dst"))
     )
-    return e_link.unionByName(e_block).dropDuplicates(["src", "dst"])
+    return e_link.unionByName(e_block)
 
 
 def _read_cc_state(checkpoint_dir: str) -> dict | None:
@@ -82,11 +94,53 @@ def _write_cc_state(checkpoint_dir: str, state: dict) -> None:
     os.replace(tmp, os.path.join(checkpoint_dir, "cc_state.json"))  # atomic
 
 
+def _components_arrow(src: pa.ChunkedArray, dst: pa.ChunkedArray):
+    """Connected components of the edges ``src — dst`` → ``(v, component)``
+    Arrow arrays: every distinct id once, labelled with the min id of its
+    component. The ids are encoded to codes in id order (``encode``), so the
+    min code is the min id. Each round hooks every root to the smallest root
+    across its edges (``np.minimum.at``), then shortcuts ``p = p[p]`` until
+    every vertex points at its root; it stops when no edge joins two roots.
+    A NULL id joins no other vertex and comes out once as ``(NULL, NULL)``,
+    as an equi-join never matches NULL."""
+    ids, s, d = encode(src, dst)
+    has_null = bool((s < 0).any() or (d < 0).any())
+    keep = (s >= 0) & (d >= 0)
+    s, d = s[keep], d[keep]
+    p = np.arange(len(ids))
+    while True:
+        ps, pd = p[s], p[d]
+        cross = ps != pd
+        if not cross.any():
+            break
+        ps, pd = ps[cross], pd[cross]
+        np.minimum.at(p, np.concatenate([ps, pd]), np.concatenate([pd, ps]))
+        while True:
+            pp = p[p]
+            if (pp == p).all():
+                break
+            p = pp
+    v, component = ids, ids.take(pa.array(p))
+    if has_null:
+        null = pa.nulls(1, type=ids.type)
+        v, component = (pa.concat_arrays([v, null]),
+                        pa.concat_arrays([component, null]))
+    return v, component
+
+
 def connected_components(edges: DataFrame, max_iter: int = 25,
                          checkpoint_dir: str | None = None, checkpoint_every: int = 4,
                          on_iteration=None) -> DataFrame:
     """(v, component) for every vertex appearing in edges; component = min vertex id
-    reachable. Checkpointed loop; converges when no label changes.
+    reachable.
+
+    When the (src, dst) frame's size estimate fits
+    ``spark.sql.autoBroadcastJoinThreshold``, it is collected once through Arrow
+    and labelled on the driver (``_components_arrow``). Otherwise a checkpointed
+    Spark loop runs until no label changes. ``max_iter``, ``checkpoint_dir``,
+    ``checkpoint_every`` and ``on_iteration`` apply to the Spark loop only: the
+    driver kernel keeps no iteration state to lose and always runs to its exact
+    fixpoint, so it never raises for ``max_iter``.
 
     Durability: ``localCheckpoint`` (the default) cuts lineage but stores blocks on
     executors — fine in local mode, but an executor loss at hour N of a 100 TB run
@@ -102,7 +156,13 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     import os
 
     spark = edges.sparkSession
-    sym = edges.select("src", "dst").unionByName(
+    pairs = edges.select("src", "dst")
+    if fits_broadcast(pairs):
+        arcs = pairs.toArrow()
+        v, component = _components_arrow(arcs["src"], arcs["dst"])
+        return id_frame(spark, edges.schema["src"].dataType,
+                        v=v, component=component)
+    sym = pairs.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
     # keyed on the PER-ITERATION join key (sym.dst == labels.v): the edge side
@@ -179,11 +239,12 @@ def canonical_map(links: DataFrame, max_iter: int = 25,
                   checkpoint_dir: str | None = None) -> DataFrame:
     """→ (mention_norm, mention_type, n_mentions, entity_id, canonical_id).
 
-    ``links`` is materialized once up front (localCheckpoint): it is consumed three
-    times (vertices, edges, final join) and is itself the head of the whole
-    docs→triples→mentions plan — without the cut, Spark re-executes that full plan per
-    consumer (measured 172 s → 9 s at sf0.1)."""
-    links = links.localCheckpoint()
+    ``links`` is materialized once, by the first job that reads it (a lazy
+    localCheckpoint, so no job of its own): it is consumed three times (vertices,
+    edges, final join) and is itself the head of the whole docs→triples→mentions
+    plan — without the cut, Spark re-executes that full plan per consumer
+    (measured 172 s → 9 s at sf0.1)."""
+    links = links.localCheckpoint(eager=False)
     m = _mention_vertices(links)
     edges = build_edges(links)
     comp = connected_components(edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir)

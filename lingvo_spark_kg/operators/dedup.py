@@ -199,7 +199,7 @@ def minhash_candidates(docs: DataFrame, n_hashes: int = 8, rows_per_band: int = 
     whole shingle-scan + n_hashes-way hash + min aggregate TWICE — verified in
     the physical plan (two full SortAggregate chains down to the parquet scan)."""
     bands = minhash_bands(docs, n_hashes, rows_per_band, shingle_n, shingles=shingles,
-                          hash=hash).localCheckpoint()
+                          hash=hash).localCheckpoint(eager=False)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_sig")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_sig")
     return (
@@ -262,10 +262,10 @@ def neardup_survivors(docs: DataFrame, pairs: DataFrame, threshold: float = 0.7,
     exactly the one whose doc_id equals its cluster_id. Docs in no surviving pair
     are their own singleton cluster (canonical by construction).
 
-    Scale shape: CC (canonicalize.connected_components — the SAME checkpointed
-    iterative operator the KG canonicalization uses) runs on the PAIR-bounded
-    graph, never the corpus; the corpus is touched once by the final left join,
-    whose build side is the component map — AQE picks broadcast vs shuffle by its
+    Scale shape: CC (canonicalize.connected_components — the SAME gated operator
+    the KG canonicalization uses) runs on the PAIR-bounded graph, never the
+    corpus; the corpus is touched once by the final left join, whose build side
+    is the component map — AQE picks broadcast vs shuffle by its
     actual size (web corpora can put a large corpus fraction into clusters, so the
     map is NOT forced broadcast). No new corpus-volume shuffle beyond that join."""
     edges = (pairs.where(F.col(pair_score_col) >= threshold)

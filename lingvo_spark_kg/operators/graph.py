@@ -16,25 +16,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
 
 from .fixpoint import fixpoint, observed, unchanged
+from .smallgraph import csr, encode, fits_broadcast, id_frame
 
 N_BUCKETS_DEFAULT = 32
 PAGERANK_CHECKPOINT_EVERY = 5
-
-
-def _id_frame(spark, id_type: T.DataType, **cols) -> DataFrame:
-    """A literal frame of node-id columns, each a Python list or an Arrow
-    array, built from a ``pyarrow.Table``. The plan is a LocalRelation, so
-    using the frame runs no job and starts no Python worker; a list-built
-    frame is a Python-RDD scan that pays a worker round trip per use."""
-    at = to_arrow_type(id_type)
-    table = pa.table({k: v if isinstance(v, pa.Array) else pa.array(v, type=at)
-                      for k, v in cols.items()})
-    return spark.createDataFrame(
-        table, T.StructType([T.StructField(k, id_type) for k in cols]))
 
 
 def _key_repartition(df: DataFrame, *cols: str) -> DataFrame:
@@ -479,9 +466,10 @@ def components(edges: DataFrame, max_iter: int = 25,
     """Connected components of the KG edge graph → (node_id, component) with
     component = min reachable node id — the fragmentation read a curation pass
     takes before deciding whether extraction produced one knowledge graph or an
-    archipelago. Thin adapter over the gated iterative CC engine
-    (canonicalize.connected_components: checkpointed ping-pong loop, durable
-    resume via ``checkpoint_dir``, convergence-observed)."""
+    archipelago. Thin adapter over canonicalize.connected_components: the
+    driver kernel when the edges fit the broadcast budget, else the
+    checkpointed ping-pong loop (durable resume via ``checkpoint_dir``,
+    convergence-observed)."""
     from .canonicalize import connected_components
 
     e = edges.select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
@@ -524,8 +512,8 @@ def shortest_path_counts(edges: DataFrame, sources, max_hops: int = 12,
         if not sources:
             raise ValueError("shortest_path_counts needs a non-empty "
                              "source set")
-        pivots = _id_frame(spark, edges.schema["src_id"].dataType,
-                           src=list(set(sources)))
+        pivots = id_frame(spark, edges.schema["src_id"].dataType,
+                          src=list(set(sources)))
     frontier = pivots.select("src", F.col("src").alias("node"),
                              F.lit(1.0).alias("sigma"), F.lit(0).alias("dist"))
     if isinstance(sources, DataFrame):
@@ -895,7 +883,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 20,
         if not sources:
             raise ValueError("sources must be a non-empty list (or None)")
         t = 1.0 / len(sources)
-        tele_df = F.broadcast(_id_frame(
+        tele_df = F.broadcast(id_frame(
             edges.sparkSession, nodes.schema["node_id"].dataType,
             node_id=list(set(sources))).withColumn("t", F.lit(t)))
         tele = (nodes.join(tele_df, "node_id", "left")
@@ -1026,17 +1014,6 @@ def _parse_path(expr: str) -> list:
     return alts
 
 
-def _fits_broadcast(df: DataFrame) -> bool:
-    """Whether the optimizer's size estimate of ``df`` is within
-    ``spark.sql.autoBroadcastJoinThreshold`` — the budget under which Spark
-    itself collects a join side through the driver to broadcast it (-1, the
-    off switch, admits nothing; an unknown size estimates as huge)."""
-    jss = df.sparkSession._jsparkSession
-    budget = jss.sessionState().conf().autoBroadcastJoinThreshold()
-    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() \
-        <= budget
-
-
 def _reach_arrow(node: pa.ChunkedArray, nbr: pa.ChunkedArray,
                  const) -> pa.Array:
     """The nodes reachable in one or more hops from ``const`` over the arcs
@@ -1046,20 +1023,13 @@ def _reach_arrow(node: pa.ChunkedArray, nbr: pa.ChunkedArray,
     ``np.unique`` codes — numpy work per level, no per-edge Python. A NULL
     id is reached like any other but never expanded, as an equi-join never
     matches NULL. ``const`` itself is reached only through a cycle."""
-    ids = pa.chunked_array(node.chunks + nbr.chunks,
-                           type=node.type).combine_chunks().dictionary_encode()
-    n_ids = len(ids.dictionary)
-    codes = pc.fill_null(ids.indices, -1).to_numpy()
-    src, dst = codes[:len(node)], codes[len(node):]
+    ids, src, dst = encode(node, nbr)
     expand = src >= 0
-    src, dst = src[expand], dst[expand]
-    nbrs = dst[np.argsort(src, kind="stable")]
-    indptr = np.zeros(n_ids + 1, dtype=np.int64)
-    np.cumsum(np.bincount(src, minlength=n_ids), out=indptr[1:])
+    indptr, nbrs = csr(src[expand], dst[expand], len(ids))
     start = -1 if const is None else pc.index(
-        ids.dictionary, pa.scalar(const, type=node.type)).as_py()
+        ids, pa.scalar(const, type=node.type)).as_py()
     frontier = np.array([start] if start >= 0 else [], dtype=np.int64)
-    seen = np.zeros(n_ids, dtype=bool)
+    seen = np.zeros(len(ids), dtype=bool)
     null_hit = False
     while frontier.size:
         lo = indptr[frontier]
@@ -1070,7 +1040,7 @@ def _reach_arrow(node: pa.ChunkedArray, nbr: pa.ChunkedArray,
         hit = np.unique(hit[hit >= 0])
         frontier = hit[~seen[hit]]
         seen[frontier] = True
-    reached = ids.dictionary.take(pa.array(np.flatnonzero(seen)))
+    reached = ids.take(pa.array(np.flatnonzero(seen)))
     if null_hit:
         reached = pa.concat_arrays([reached, pa.nulls(1, type=reached.type)])
     return reached
@@ -1359,7 +1329,7 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         lits = sorted(set(consts), key=repr)
         if lits:
             base = base.unionByName(
-                _id_frame(spark, id_type, src_id=lits, dst_id=lits))
+                id_frame(spark, id_type, src_id=lits, dst_id=lits))
         return base
 
     def compile_step(inv, spec, mod, consts):
@@ -1403,7 +1373,7 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         arm filtered to C.
 
         Two paths, chosen by the step adjacency's plan-size estimate against
-        ``spark.sql.autoBroadcastJoinThreshold`` (:func:`_fits_broadcast`):
+        ``spark.sql.autoBroadcastJoinThreshold`` (``smallgraph.fits_broadcast``):
 
         * within the budget, one job collects the adjacency through Arrow
           and the BFS runs vectorized on the driver (:func:`_reach_arrow`);
@@ -1427,20 +1397,20 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         else:
             step = step.select(F.col("src_id").alias("node"),
                                F.col("dst_id").alias("nbr"))
-        if _fits_broadcast(step):
+        if fits_broadcast(step):
             arcs = step.toArrow()
             reached = _reach_arrow(arcs["node"], arcs["nbr"], const)
             if mod == "*":
                 reached = pc.unique(pa.concat_arrays(
                     [reached, pa.array([const], type=reached.type)]))
-            pairs = _id_frame(spark, id_type, node=reached)
+            pairs = id_frame(spark, id_type, node=reached)
         else:
             pairs = reach_distributed(step, const)
             if pairs is None:
                 return None
             if mod == "*":
                 pairs = pairs.unionAll(
-                    _id_frame(spark, id_type, node=[const])).distinct()
+                    id_frame(spark, id_type, node=[const])).distinct()
         if const_is_obj:
             return pairs.select(F.col("node").alias("src_id"),
                                 F.lit(const).cast(id_type).alias("dst_id"))
@@ -1462,8 +1432,8 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         # settled starts EMPTY (not at the source): the constant itself is a
         # solution only when actually re-reached (self-loop / cycle — p+
         # semantics), so the first frontier must not be anti-joined away
-        run = fixpoint(_id_frame(spark, id_type, node=[const]), expand, None,
-                       128, settled=_id_frame(spark, id_type, node=[]),
+        run = fixpoint(id_frame(spark, id_type, node=[const]), expand, None,
+                       128, settled=id_frame(spark, id_type, node=[]),
                        name="reach")
         return run.settled if run.converged else None
 
@@ -1878,7 +1848,7 @@ def bfs_distances(edges: DataFrame, sources: list, max_hops: int = 20,
     spark = edges.sparkSession
     adj = _undirected_adj(edges, directed)
     id_type = edges.schema["src_id"].dataType   # ids are opaque — match it
-    frontier = (_id_frame(spark, id_type, node=list(set(sources)))
+    frontier = (id_frame(spark, id_type, node=list(set(sources)))
                 .withColumn("distance", F.lit(0)))
     if parents:
         frontier = frontier.withColumn("parent", F.lit(None).cast(id_type))
@@ -2070,8 +2040,8 @@ def shortest_paths(edges: DataFrame, sources: list,
     # keyed on the relaxation join key — one exchange, not one per
     # Bellman-Ford round (guide §2.4)
     arcs = _key_repartition(arcs, "node").localCheckpoint(eager=False)
-    dist = (_id_frame(spark, edges.schema["src_id"].dataType,
-                      node=list(set(sources)))
+    dist = (id_frame(spark, edges.schema["src_id"].dataType,
+                     node=list(set(sources)))
             .withColumn("cost", F.lit(0).cast("long")))
 
     def step(dist, it):

@@ -18,6 +18,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the box's physical memory, at most 48g. The driver JVM grows its
+    heap toward the maximum before it collects, so a maximum above the box's
+    memory lets a long session's garbage get it killed by the OS."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, total // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "lingvo-spark-kg", cpus: int | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None,
               arrow_batch_rows: int = 2048) -> SparkSession:
@@ -43,7 +51,8 @@ def get_spark(app_name: str = "lingvo-spark-kg", cpus: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

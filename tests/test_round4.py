@@ -94,6 +94,39 @@ def test_minhash_hash_equivalence(spark):
     assert md5_pairs == xxh_pairs
 
 
+def test_minhash_candidates_checkpoints_bands_lazily(spark):
+    """Building the LSH candidate frame does not materialize its band frame
+    (adaptive execution still runs the shuffle-map job that plans its stages,
+    but no job at construction is the checkpoint's own), and its rows are the
+    band self-join's: every doc pair sharing a band signature, with the
+    number of bands shared."""
+    from collections import Counter, defaultdict
+
+    from lingvo_spark_kg.operators.dedup import minhash_bands, minhash_candidates
+
+    d = _docs_slice(spark)
+    sc = spark.sparkContext
+    group = f"minhash-lazy-{id(d)}"
+    sc.setJobGroup(group, group)
+    try:
+        cand = minhash_candidates(d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s).name for j in st.getJobIdsForGroup(group)
+              for s in st.getJobInfo(j).stageIds]
+    assert not [n for n in stages if n.startswith("localCheckpoint")], stages
+    by_band = defaultdict(list)
+    for r in minhash_bands(d).collect():
+        by_band[(r["band_idx"], r["band_sig"])].append(r["doc_id"])
+    want = Counter((a, b) for ids in by_band.values()
+                   for a in ids for b in ids if a < b)
+    assert want, "fixture slice must contain candidate pairs"
+    assert {(r["doc_a"], r["doc_b"]): r["n_shared_bands"]
+            for r in cand.collect()} == want
+
+
 def test_minhash_bad_hash_rejected(spark):
     from lingvo_spark_kg.operators.dedup import minhash_signatures
     from lingvo_spark_kg.operators.textstats import winnow_fingerprints

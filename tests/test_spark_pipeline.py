@@ -422,12 +422,28 @@ def test_ann_ivf_self_match_and_bounded_candidates(spark):
     assert sum(sorted(sizes.values(), reverse=True)[:4]) < emb.count()
 
 
-def test_connected_components_durable_resume(spark, tmp_path):
+@pytest.fixture
+def cc_kernel_calls(monkeypatch):
+    """The calls of the driver CC kernel, recorded by a pass-through spy."""
+    calls = []
+    real = canonicalize._components_arrow
+
+    def spy(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(canonicalize, "_components_arrow", spy)
+    return calls
+
+
+def test_connected_components_durable_resume(spark, tmp_path, cc_kernel_calls):
     """VERDICT r1 item 7: kill between CC iterations, complete from durable state.
     A long path graph (diameter 12) forces many propagation iterations; the fault
     injector kills the run after the first durable checkpoint; the rerun must (a)
     resume past iteration 0 instead of restarting and (b) produce exactly the
-    labels of an uninterrupted run."""
+    labels of an uninterrupted run. The list-built chain has no size estimate,
+    so it never fits the broadcast budget: every call here runs the Spark loop,
+    never the driver kernel."""
     n = 13
     chain = [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
@@ -456,6 +472,7 @@ def test_connected_components_durable_resume(spark, tmp_path):
               canonicalize.connected_components(edges).collect()}
     assert comp == golden
     assert set(comp.values()) == {"v00"}
+    assert cc_kernel_calls == []
 
 
 def test_cc_convergence_check_rides_materialization(spark, monkeypatch):
@@ -464,22 +481,108 @@ def test_cc_convergence_check_rides_materialization(spark, monkeypatch):
     action — at scale every extra driver round-trip per iteration is a barrier.
     Pinned by asserting a normally-converging run performs ZERO DataFrame.count()
     actions (the old implementation ran one every 2nd iteration)."""
-    import pyspark.sql.dataframe as dfmod
-
     counts = []
-    orig = dfmod.DataFrame.count
+    frame_cls = type(spark.range(1))   # the concrete class defines count
+    orig = frame_cls.count
 
     def spy(self):
         counts.append(1)
         return orig(self)
 
-    monkeypatch.setattr(dfmod.DataFrame, "count", spy)
+    monkeypatch.setattr(frame_cls, "count", spy)
     chain = [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(8)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
     comp = {r["v"]: r["component"]
             for r in canonicalize.connected_components(edges).collect()}
     assert set(comp.values()) == {"v00"}
     assert counts == []  # convergence observed inside the checkpoint jobs
+
+
+def test_cc_driver_kernel_matches_spark_loop(spark, cc_kernel_calls):
+    """The driver CC kernel labels every vertex exactly as the Spark loop does,
+    on seeded random multigraphs built through Arrow (a LocalRelation, so they
+    fit the broadcast budget): string ids mixing Cyrillic, case and long ids
+    (min by UTF-8 bytes), int ids, self-loops, duplicate edges, isolated pairs
+    and NULL endpoints (one (NULL, NULL) row that joins nothing). The Spark
+    side runs with the budget turned off; a spy pins which path ran."""
+    import random
+
+    import pyarrow as pa
+
+    def labels(df):
+        return sorted(((r["v"], r["component"]) for r in
+                       canonicalize.connected_components(df).collect()),
+                      key=repr)
+
+    rng = random.Random(29)
+    heads = ["Ж", "ж", "Ёлка", "ёлка", "A", "a", "Z", "z", "ы" * 40]
+    graphs = []
+    for g in range(30):
+        n = rng.randrange(1, 25)
+        if g % 3 == 2:
+            typ, ids = pa.int64(), rng.sample(range(-50, 1000), n)
+        else:
+            typ = pa.string()
+            ids = [rng.choice(heads) + str(i) + "x" * rng.choice([0, 0, 300])
+                   for i in range(n)]
+        pool = ids + [None] * (g % 2)
+        rows = [(rng.choice(pool), rng.choice(pool))
+                for _ in range(rng.randrange(0, 40))]
+        rows += [(v, v) for v in rng.sample(ids, min(2, n))]   # self-loops
+        rows += rng.sample(rows, len(rows) // 3)                # duplicates
+        if typ == pa.string():                                  # isolated pair
+            rows.append((f"iso{g}b", f"iso{g}a"))
+        else:
+            rows.append((5000 + g, 4000 + g))
+        rng.shuffle(rows)
+        graphs.append(spark.createDataFrame(pa.table({
+            "src": pa.array([r[0] for r in rows], typ),
+            "dst": pa.array([r[1] for r in rows], typ)})))
+    driver = [labels(df) for df in graphs]
+    assert len(cc_kernel_calls) == len(graphs)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    budget = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for df, want in zip(graphs, driver):
+            assert labels(df) == want
+    finally:
+        spark.conf.set(key, budget)
+    assert len(cc_kernel_calls) == len(graphs)
+    assert sum((None, None) in want for want in driver) >= 5
+
+
+def test_canonical_map_over_parquet_links_runs_at_most_five_jobs(
+        spark, tmp_path, cc_kernel_calls):
+    """canonical_map over a parquet-read links table labels its small mention
+    graph on the driver: at most 5 Spark jobs for the whole call and its
+    collect (27 with the Spark loop, which runs several per iteration)."""
+    import pyarrow as pa
+
+    norms = ["сергей козлов", "козлов", "с . козлов", "анна петрова",
+             "петрова", "иван", "москва"]
+    where = str(tmp_path / "links")
+    spark.createDataFrame(pa.table({
+        "mention_norm": norms,
+        "mention_type": ["PER"] * 6 + ["LOC"],
+        "n_mentions": pa.array(range(1, 8), pa.int64()),
+        "entity_id": [None, "Q1", None, "Q2", None, None, "Q3"],
+    })).write.parquet(where)
+    links = spark.read.parquet(where)
+    sc = spark.sparkContext
+    group = f"canon-jobs-{id(links)}"
+    sc.setJobGroup(group, group)
+    try:
+        canon = {r["mention_norm"]: r["canonical_id"] for r in
+                 canonicalize.canonical_map(links).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(cc_kernel_calls) == 1
+    assert len({canon[n] for n in norms[:3]}) == 1
+    assert canon["анна петрова"] == canon["петрова"]
+    assert canon["иван"] == "m:PER:иван"
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_canonicalization_groups_name_variants(spark, docs, gaz_bc):
