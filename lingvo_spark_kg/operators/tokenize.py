@@ -7,10 +7,11 @@ ConsoleDemo/Program.cs:254-256 becomes partition parallelism). Media spans are n
 routed through Python at all — ``media_spans()`` is a pure column projection
 (posexplode + filter), which Catalyst prunes to the columns it needs.
 
-Within one Arrow batch, identical span texts are tokenized once (dict memo) — the
-batch-local analog of the reference's thread-local tokenizer buffer reuse
-(Tokenizer.cs:276-284); cross-batch state is deliberately avoided to keep the operator
-deterministic under any partitioning.
+Within one task, identical span texts are tokenized once (a per-task dict memo,
+cleared when it outgrows its cap) — the task-local analog of the reference's
+thread-local tokenizer buffer reuse (Tokenizer.cs:276-284). The memo changes cost,
+never output: a span's sentences are a pure function of its text, so the result is
+the same under any partitioning or batching.
 """
 
 from __future__ import annotations

@@ -114,9 +114,11 @@ def docs_to_triples_fused(docs: DataFrame, gazetteer_bc,
        walked via flat Arrow children + list offsets (no per-row dict materialization),
        and the output batch is built as flat Arrow arrays — measured ~35% lower
        batch-traversal overhead than the pandas object path;
-     * per-batch memo: identical span texts are tokenized/tagged once per Arrow batch
-       (the batch-local analog of the reference's thread-local buffer reuse,
-       Tokenizer.cs:276-284); no cross-batch state, so output is partitioning-invariant.
+     * per-task memo: identical span texts are tokenized/tagged once per task, across
+       its Arrow batches (the task-local analog of the reference's thread-local buffer
+       reuse, Tokenizer.cs:276-284; cleared when it outgrows its cap). A span's
+       triples are a pure function of its text, so the memo changes only cost and
+       output stays partitioning-invariant.
     """
     import pyarrow as pa
     from pyspark.sql import functions as F

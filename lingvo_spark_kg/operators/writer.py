@@ -39,6 +39,8 @@ class TableWriter(Protocol):
 
     def drop(self, spark: SparkSession, table: str) -> None: ...
 
+    def version(self, spark: SparkSession, table: str) -> object | None: ...
+
 
 class ParquetTableWriter:
     """Directory-per-table parquet layout under ``root``."""
@@ -87,6 +89,16 @@ class ParquetTableWriter:
         p = self._path(table)
         return (os.path.exists(os.path.join(p, "_SUCCESS"))
                 and os.path.exists(os.path.join(p, "_schema.json")))
+
+    def version(self, spark: SparkSession, table: str) -> object | None:
+        """A token that changes whenever the table is rewritten — the
+        ``_SUCCESS`` marker's inode and mtime, since every committed write
+        replaces the marker — or None when the table is not committed."""
+        try:
+            st = os.stat(os.path.join(self._path(table), "_SUCCESS"))
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns
 
     def invalidate(self, spark: SparkSession, table: str) -> None:
         """Mark the table not-done (the pipeline's config-change guard calls this so
@@ -150,6 +162,11 @@ class IcebergTableWriter:
 
     def done(self, spark: SparkSession, table: str) -> bool:
         return spark.catalog.tableExists(self._full(table))
+
+    def version(self, spark: SparkSession, table: str) -> object | None:
+        # a catalog commit leaves no local marker to compare; None = the table
+        # is never memoized (KgPipeline.table re-reads it on every call)
+        return None
 
     def invalidate(self, spark: SparkSession, table: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {self._full(table)}")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fixtures.corpus import gazetteer_from_aliases, make_aliases
-from .operators import canonicalize, graph, linking
+from .operators import canonicalize, graph, linking, smallgraph
 from .operators.docsgen import generate_docs
 from .operators.schemas import ALIASES_SCHEMA
 from .operators.tag import tag_sentences_lexicon
@@ -263,10 +263,15 @@ class KgPipeline:
         ``generation=g`` time-travels a GRAPH stage to committed generation ``g``
         (0 = the base run() output, k = the state after the k-th delta ingest) —
         the Iceberg ``VERSION AS OF`` analog; raises if ``g`` was expired or never
-        committed (``generations()`` lists what is readable)."""
+        committed (``generations()`` lists what is readable).
+
+        A current-generation ``edges`` read returns a session-resident copy
+        when the table is small (:meth:`_resident_edges`); every other read is
+        the writer's."""
         w = self._writer()
         log = self._ingest_log()
-        if generation is not None:
+        current = generation is None
+        if not current:
             if stage not in self._GRAPH_STAGES:
                 raise ValueError(
                     f"generation reads apply to graph stages {self._GRAPH_STAGES},"
@@ -275,16 +280,52 @@ class KgPipeline:
                 raise ValueError(
                     f"generation {generation} is not readable (committed: "
                     f"{self.generations()}) — expired or never committed")
-            name = stage if generation == 0 else f"{stage}__g{generation}"
-            return w.read(self.spark, self._resolve_alias(log, name))
-        if stage in self._GRAPH_STAGES and log["graph_gen"]:
-            name = f"{stage}__g{log['graph_gen']}"
-            return w.read(self.spark, self._resolve_alias(log, name))
-        df = w.read(self.spark, stage)
-        for b in log["batches"]:
-            t = f"{stage}__b{b}"
-            if w.done(self.spark, t):
-                df = df.unionByName(w.read(self.spark, t))
+        elif stage in self._GRAPH_STAGES:
+            generation = log["graph_gen"]
+        else:
+            df = w.read(self.spark, stage)
+            for b in log["batches"]:
+                t = f"{stage}__b{b}"
+                if w.done(self.spark, t):
+                    df = df.unionByName(w.read(self.spark, t))
+            return df
+        name = self._resolve_alias(
+            log, stage if generation == 0 else f"{stage}__g{generation}")
+        if stage == "edges" and current:
+            return self._resident_edges(name)
+        return w.read(self.spark, name)
+
+    def _resident_edges(self, name: str) -> DataFrame:
+        """The physical edges table ``name`` as a one-partition LocalRelation
+        (``smallgraph.local_frame``) when its parquet read fits the broadcast
+        budget and holds at most ``smallgraph.ONE_PARTITION_ROWS`` rows, else
+        that read. Lookups are planned and run against the copy: an aggregate
+        over it needs no exchange, and a repeat call lists no files. Deciding
+        runs one job, a collect of at most the cap plus one row. The result
+        either way is memoized for the last table read, keyed by ``name``, the
+        writer's ``version`` token and the budget, so a rewrite by any writer
+        — a rebuild by another pipeline object included — is read afresh, and
+        so is every read once the budget changes; a writer without a token
+        (None) gets the plain read every time."""
+        w = self._writer()
+        # the token is taken BEFORE the read: a rewrite racing the collect then
+        # leaves a memo whose key is already stale, never a stale copy under a
+        # fresh key
+        key = (name, w.version(self.spark, name),
+               smallgraph.broadcast_budget(self.spark))
+        memo = getattr(self, "_edges_memo", None)
+        if memo is not None and memo[0] == key:
+            return memo[1]
+        self._edges_memo = None
+        df = w.read(self.spark, name)
+        if key[1] is None:
+            return df
+        if smallgraph.fits_broadcast(df):
+            cap = smallgraph.ONE_PARTITION_ROWS
+            head = df.limit(cap + 1).toArrow()
+            if head.num_rows <= cap:
+                df = smallgraph.local_frame(self.spark, head, df.schema)
+        self._edges_memo = (key, df)
         return df
 
     @staticmethod

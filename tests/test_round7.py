@@ -359,7 +359,10 @@ def test_reach_arrow_matches_python_bfs():
 def test_constant_endpoint_path_runs_at_most_three_jobs(spark, tmp_path):
     """A constant-endpoint p+ over a small parquet graph collects its step
     adjacency once and expands the frontier on the driver: at most 3 Spark
-    jobs for the whole query, where the per-hop loop runs several per hop."""
+    jobs for the whole query, where the per-hop loop runs several per hop.
+    The reached set comes back as a one-partition LocalRelation
+    (``smallgraph.id_frame``), so a global count over it plans no exchange:
+    at most 2 jobs, the adjacency collect and the count."""
     from lingvo_spark_kg.operators.graph import match_pattern
 
     where = str(tmp_path / "edges")
@@ -367,16 +370,23 @@ def test_constant_endpoint_path_runs_at_most_three_jobs(spark, tmp_path):
               + [(0, 50, "of")]).write.parquet(where)
     df = spark.read.parquet(where)
     sc = spark.sparkContext
-    group = f"reach-jobs-{id(df)}"
-    sc.setJobGroup(group, group)
-    try:
-        got = sorted(r["y"] for r in
-                     match_pattern(df, [(0, "in+", "?y")]).collect())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action(match_pattern(df, [(0, "in+", "?y")]))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got, n_jobs = jobs(f"reach-jobs-{id(df)}",
+                       lambda q: sorted(r["y"] for r in q.collect()))
     assert got == list(range(1, 11))
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert n_jobs <= 3
+    n, n_jobs = jobs(f"reach-count-jobs-{id(df)}", lambda q: q.count())
+    assert n == 10
+    assert n_jobs <= 2
 
 
 def test_order_patterns_selectivity_and_connectivity():
@@ -499,10 +509,56 @@ def _norm(df):
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def _numeric_env() -> str:
+    """The CPU, SIMD and BLAS a float result was computed under."""
+    import os
+
+    import numpy as np
+
+    cpu: dict[str, str] = {}
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                k, _, v = line.partition(":")
+                cpu.setdefault(k.strip(), v.strip())
+    except OSError:
+        pass
+    simd = [f for f in cpu.get("flags", "").split()
+            if f.startswith(("sse", "ssse", "avx", "fma", "f16c"))]
+    cfg = np.show_config(mode="dicts")
+    threads = {k: os.environ.get(k) for k in ("OMP_NUM_THREADS",
+                                              "OPENBLAS_NUM_THREADS")}
+    return (f"cpu: {cpu.get('model name', '?')}; SIMD flags: {' '.join(simd)}\n"
+            f"numpy {np.__version__}, dispatch "
+            f"{cfg['SIMD Extensions']['found']}; threads {threads}\n"
+            f"blas: {cfg['Build Dependencies']['blas']}")
+
+
+def _golden_diff(got, ref, keys: list[str]) -> str:
+    """Which cells of two ``_norm``ed frames differ, matched on ``keys``
+    (a float change can reorder the sorted rows), and by how much."""
+    m = got.merge(ref, on=keys, how="outer", suffixes=("", "_ref"),
+                  indicator=True)
+    out = [f"{int((m['_merge'] != 'both').sum())} rows on one side only"]
+    for c in got.columns:
+        if c in keys:
+            continue
+        a, b = m[c], m[f"{c}_ref"]
+        diff = int((a != b).sum())
+        if "float" in str(a.dtype):
+            out.append(f"{c}: {diff} cells differ, max |Δ| "
+                       f"{(a - b).abs().max():.3g}")
+        else:
+            out.append(f"{c}: {diff} cells differ")
+    return "; ".join(out)
+
+
 def test_tag_probs_numpy_still_gated_vs_golden(spark, sf_dir):
     """The NumPy probability path lost its driver row to the onnx superset
     gate (round-7 50-row fold) — this keeps its independent-golden compare as
-    a hard pytest signal."""
+    a hard pytest signal. The compare is exact; a mismatch reports the
+    differing cells and the numeric environment, since it has been seen to
+    come and go on one box."""
     import duckdb
 
     import __spark_entry__ as e
@@ -514,7 +570,10 @@ def test_tag_probs_numpy_still_gated_vs_golden(spark, sf_dir):
     ref = _norm(duckdb.connect().execute(
         f"SELECT * FROM read_parquet('{paths['tag_probs']}')").df())
     assert len(got) == len(ref) > 0
-    assert got.equals(ref)
+    assert got.equals(ref), (
+        _golden_diff(got, ref,
+                     ["doc_id", "span_idx", "sent_idx", "tok_idx", "rank"])
+        + "\n" + _numeric_env())
 
 
 def test_media_frames_still_gated_vs_goldens(spark, sf_dir):
