@@ -1,6 +1,6 @@
 """Distributed deterministic corpus generation.
 
-Spark-side wrapper over fixtures.corpus.make_doc: `spark.range(n)` → mapInPandas.
+Spark-side wrapper over fixtures.corpus.make_doc: `spark.range(n)` → mapInArrow.
 Because each doc is a pure function of (seed, idx), output is bitwise identical at any
 parallelism — generation scales linearly with executors (embarrassingly parallel, no
 shuffle) and the same code materializes the t1/t2/bench corpora.

@@ -9,10 +9,13 @@ sentences; dedup + counting happens in the downstream groupBy.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..model.triples import merge_bio_spans
-from .tag import _words_from_tokens
+from . import arrowkernel as ak
+from .triples import value_words
 
 MENTIONS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -28,39 +31,18 @@ MENTIONS_SCHEMA = T.StructType([
 
 def ner_mentions(tagged: DataFrame) -> DataFrame:
     """tagged(doc_id, span_idx, sent_idx, tokens, ner_tags, ...) → one row per BIO
-    entity span."""
-    import pyarrow as pa
+    entity span. Only the token values cross into Python (``tokens.value``
+    projected JVM-side): BIO merging reads nothing else."""
+    proj = tagged.select("doc_id", "span_idx", "sent_idx",
+                         F.col("tokens.value").alias("values"), "ner_tags")
+    schema = to_arrow_schema(MENTIONS_SCHEMA)
 
     def run(batches):
         for b in batches:
-            names = b.schema.names
-            doc_ids = b.column(names.index("doc_id")).to_pylist()
-            span_idx = b.column(names.index("span_idx")).to_pylist()
-            sent_idx = b.column(names.index("sent_idx")).to_pylist()
-            tokens = b.column(names.index("tokens")).to_pylist()
-            ner_tags = b.column(names.index("ner_tags")).to_pylist()
-            cols = {k: [] for k in ("doc_id", "span_idx", "sent_idx", "start_tok",
-                                    "end_tok", "surface", "mention_norm", "mention_type")}
-            for d, sp, si, toks, tags in zip(doc_ids, span_idx, sent_idx, tokens, ner_tags):
-                words = _words_from_tokens(toks)
-                for span in merge_bio_spans(words, list(tags)):
-                    cols["doc_id"].append(d)
-                    cols["span_idx"].append(sp)
-                    cols["sent_idx"].append(si)
-                    cols["start_tok"].append(span.start_tok)
-                    cols["end_tok"].append(span.end_tok)
-                    cols["surface"].append(span.surface)
-                    cols["mention_norm"].append(span.norm)
-                    cols["mention_type"].append(span.etype)
-            yield pa.RecordBatch.from_pydict({
-                "doc_id": pa.array(cols["doc_id"], pa.string()),
-                "span_idx": pa.array(cols["span_idx"], pa.int32()),
-                "sent_idx": pa.array(cols["sent_idx"], pa.int32()),
-                "start_tok": pa.array(cols["start_tok"], pa.int32()),
-                "end_tok": pa.array(cols["end_tok"], pa.int32()),
-                "surface": pa.array(cols["surface"], pa.string()),
-                "mention_norm": pa.array(cols["mention_norm"], pa.string()),
-                "mention_type": pa.array(cols["mention_type"], pa.string()),
-            })
+            rows: list[tuple] = []
+            for d, sp, si, values, tags in zip(*(c.to_pylist() for c in b.columns)):
+                rows += [(d, sp, si, *span)
+                         for span in merge_bio_spans(value_words(values), tags)]
+            yield ak.rows_batch(rows, schema)
 
-    return tagged.mapInArrow(run, schema=MENTIONS_SCHEMA)
+    return proj.mapInArrow(run, schema=MENTIONS_SCHEMA)

@@ -22,42 +22,13 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for callers)
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..model.lexicon import LexiconNer, pos_tag_word
 from ..tokenizer import EWT_PUNCTUATION, IT_EMAIL, IT_NUM, IT_URL, Word
+from . import arrowkernel as ak
 from .schemas import TAGGED_SCHEMA
-
-_MODEL_CACHE: dict[object, object] = {}
-_MODEL_CACHE_MAX = 16
-
-
-def _bc_key(bc) -> object:
-    """Stable cache key for a Spark broadcast. ``id(bc)`` is unsafe on executors: each
-    task deserializes a fresh handle (so the cache never hits and grows unboundedly)
-    and a GC'd handle's id can be recycled by a DIFFERENT broadcast, silently serving a
-    stale model. ``Broadcast._path`` is the per-broadcast spill file — unique per
-    broadcast and identical for every handle of it within a worker process (executor
-    handles come from the bid-keyed _broadcastRegistry). A handle without ``_path``
-    (spark.io.encryption.enabled executors decrypt eagerly and never spill) returns
-    None — the caller then rebuilds per task (correct, just uncached) instead of
-    either crashing the job or degrading to the recycled-``id()`` stale-hit hazard
-    this function exists to prevent."""
-    return getattr(bc, "_path", None)
-
-
-def _cached_from_broadcast(bc, build):
-    """Rehydrate-once-per-worker helper (bounded FIFO so long-lived workers that see
-    many distinct broadcasts don't leak)."""
-    key = _bc_key(bc)
-    if key is None:  # no stable per-broadcast key available (encrypted handles)
-        return build(bc.value)
-    m = _MODEL_CACHE.get(key)
-    if m is None:
-        while len(_MODEL_CACHE) >= _MODEL_CACHE_MAX:
-            _MODEL_CACHE.pop(next(iter(_MODEL_CACHE)))
-        m = build(bc.value)
-        _MODEL_CACHE[key] = m
-    return m
 
 
 def _words_from_tokens(tokens: list[dict]) -> list[Word]:
@@ -97,28 +68,6 @@ def _correct_output_types_flat(itypes: list, extras: list, lo: int, hi: int,
     return out
 
 
-def _token_fields(b: "pa.RecordBatch", names: tuple[str, ...]):
-    """(list_offsets, {field: flat values list}) for the batch's ``tokens`` column.
-    ``.values`` (NOT ``.flatten()``) so indexes line up with the raw offsets buffer
-    even when the batch arrives sliced — same invariant as operators/tokenize.py."""
-    tokens = b.column(b.schema.get_field_index("tokens"))
-    flat = tokens.values
-    offs = tokens.offsets.to_pylist()
-    return offs, {n: flat.field(n).to_pylist() for n in names}
-
-
-_TAGS_TYPE = pa.list_(pa.string())
-
-
-def _with_tag_columns(b: "pa.RecordBatch", pos_col: list, ner_col: list) -> "pa.RecordBatch":
-    """Input batch + (pos_tags, ner_tags): every input column passes through as the
-    SAME Arrow buffer — the nested tokens structs never round-trip through Python."""
-    return pa.RecordBatch.from_arrays(
-        list(b.columns) + [pa.array(pos_col, _TAGS_TYPE), pa.array(ner_col, _TAGS_TYPE)],
-        names=list(b.schema.names) + ["pos_tags", "ner_tags"],
-    )
-
-
 def as_result_vm(tagged: DataFrame, tag_col: str = "pos_tags") -> DataFrame:
     """The reference web-service result shape as a DataFrame: per sentence, the array
     of (Word, Label) tuples (ResultVM{Sents[].Tuples[]{Word,Label}} —
@@ -145,12 +94,13 @@ def tag_sentences_lexicon(sentences: DataFrame, gazetteer_bc) -> DataFrame:
     {normalized surface → PER|ORG|LOC}. Arrow-native: token fields are read as flat
     arrays and all input columns pass through untouched (measured ~35% less
     batch-traversal overhead than the pandas object path on this nested schema)."""
+    schema = to_arrow_schema(TAGGED_SCHEMA)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ner = _cached_from_broadcast(gazetteer_bc, LexiconNer)
+        ner = ak.cached_from_broadcast(gazetteer_bc, LexiconNer)
         for b in batches:
-            offs, f = _token_fields(b, ("start", "length", "value", "input_type",
-                                        "extra"))
+            offs, f = ak.token_fields(b, ("start", "length", "value", "input_type",
+                                          "extra"))
             starts, lengths, values = f["start"], f["length"], f["value"]
             itypes, extras = f["input_type"], f["extra"]
             pos_col, ner_col = [], []
@@ -161,18 +111,13 @@ def tag_sentences_lexicon(sentences: DataFrame, gazetteer_bc) -> DataFrame:
                 pos = [pos_tag_word(w) for w in words]
                 pos_col.append(_correct_output_types_flat(itypes, extras, lo, hi, pos))
                 ner_col.append(ner.tag(words))
-            yield _with_tag_columns(b, pos_col, ner_col)
+            yield ak.record_batch(dict(zip(b.schema.names, b.columns),
+                                       pos_tags=pos_col, ner_tags=ner_col), schema)
 
     return sentences.mapInArrow(run, schema=TAGGED_SCHEMA)
 
 
-_PROBS_PA_TYPE = pa.list_(pa.list_(pa.struct([("label", pa.string()),
-                                              ("prob", pa.float64())])))
-
-
 def _probs_schema():
-    from pyspark.sql import types as T
-
     from .schemas import SENTENCES_SCHEMA
 
     return T.StructType(SENTENCES_SCHEMA.fields + [
@@ -193,21 +138,25 @@ def tag_sentences_probs(sentences: DataFrame, model_bc, feature: str = "ending_p
 
     The decode is the model's batch-1 ``predict_probs`` path (the reference computes
     probabilities only on its single-sentence API), memoized per distinct feature
-    sequence within the partition — web corpora are duplicate-heavy, and the batch-1
-    kernel is deterministic, so memoization changes cost, not results. The backend
-    must expose ``predict_probs`` — the NumPy models and ``OnnxTagBackend`` both do
+    sequence within the task (``arrowkernel.TaskMemo``) — web corpora are
+    duplicate-heavy, and the batch-1 kernel is deterministic, so memoization changes
+    cost, not results. The backend must expose ``predict_probs`` — the NumPy models
+    and ``OnnxTagBackend`` both do
     (the ONNX path applies the shared ``backend.probs_from_logits`` to the
     session's bit-parity logits, pinned identical in tests)."""
     if backend_loader is None:
         from ..model.backend import numpy_backend
 
         backend_loader = numpy_backend(encoder)
+    out_schema = _probs_schema()
+    schema = to_arrow_schema(out_schema)
+    cap = ak.MEMO_CAP
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        model = _cached_from_broadcast(model_bc, backend_loader)
-        memo: dict[tuple, tuple] = {}
+        model = ak.cached_from_broadcast(model_bc, backend_loader)
+        memo = ak.TaskMemo(cap)
         for b in batches:
-            offs, f = _token_fields(b, (feature,))
+            offs, f = ak.token_fields(b, (feature,))
             feats = f[feature]
             probs_col, ratio_col = [], []
             for row in range(b.num_rows):
@@ -217,16 +166,13 @@ def tag_sentences_probs(sentences: DataFrame, model_bc, feature: str = "ending_p
                     per_tok, ratio = model.predict_probs(list(key))
                     res = ([[{"label": c, "prob": p} for c, p in ranked]
                             for ranked in per_tok], ratio)
-                    memo[key] = res
+                    memo.put(key, res)
                 probs_col.append(res[0])
                 ratio_col.append(res[1])
-            yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [pa.array(probs_col, _PROBS_PA_TYPE),
-                                   pa.array(ratio_col, pa.float64())],
-                names=list(b.schema.names) + ["probs", "words_in_dict_ratio"],
-            )
+            yield ak.record_batch(dict(zip(b.schema.names, b.columns), probs=probs_col,
+                                       words_in_dict_ratio=ratio_col), schema)
 
-    return sentences.mapInArrow(run, schema=_probs_schema())
+    return sentences.mapInArrow(run, schema=out_schema)
 
 
 def tag_sentences_bilstm(sentences: DataFrame, pos_model_bc, ner_model_bc,
@@ -245,62 +191,53 @@ def tag_sentences_bilstm(sentences: DataFrame, pos_model_bc, ner_model_bc,
         from ..model.backend import numpy_backend
 
         backend_loader = numpy_backend(encoder)
-
-    def get_model(bc):
-        return _cached_from_broadcast(bc, backend_loader)
-
-    def predict_unique(model, feats: list[list[str]],
-                       memo: dict) -> list[list[str]]:
-        # per-TASK dedup (was per-batch): identical feature sequences decoded
-        # once per task — the DNN analog of the tokenizer operators' text memo
-        # (real web corpora are duplicate-heavy; the decode is deterministic
-        # and batch-invariant — the invariance tag_sentences_bilstm_dedup is
-        # already pinned on — so results are identical to predicting every
-        # copy). The cap bounds worker memory on mostly-unique corpora.
-        if len(memo) > 65536:
-            memo.clear()
-        uniq: list[list[str]] = []
-        keys: list[tuple] = []
-        for fs in feats:
-            key = tuple(fs)
-            keys.append(key)
-            if key not in memo:
-                memo[key] = None
-                uniq.append(fs)
-        if uniq:
-            for fs, tags in zip(uniq, model.predict_tags(uniq)):
-                memo[tuple(fs)] = tags
-        return [memo[k] for k in keys]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pos_model = get_model(pos_model_bc)
-        ner_model = get_model(ner_model_bc)
-        pos_memo: dict[tuple, list] = {}
-        ner_memo: dict[tuple, list] = {}
-        for b in batches:
-            offs, f = _token_fields(b, ("ending_pos", "ending_ner", "input_type",
-                                        "extra"))
-            ep, en = f["ending_pos"], f["ending_ner"]
-            itypes, extras = f["input_type"], f["extra"]
-            bounds = [(offs[r], offs[r + 1]) for r in range(b.num_rows)]
-            pos_feats = [ep[lo:hi] for lo, hi in bounds]
-            ner_feats = [en[lo:hi] for lo, hi in bounds]
-            pos_raw = predict_unique(pos_model, pos_feats, pos_memo)
-            ner_raw = predict_unique(ner_model, ner_feats, ner_memo)
-            pos_col = [_correct_output_types_flat(itypes, extras, lo, hi, tags)
-                       for (lo, hi), tags in zip(bounds, pos_raw)]
-            yield _with_tag_columns(b, pos_col, ner_raw)
-
     # output schema = input schema + the two tag columns (not the fixed
     # TAGGED_SCHEMA): the operator passes every input column through untouched, so
     # it also works on projected frames — e.g. the distinct-tokens dim of
     # tag_sentences_bilstm_dedup
-    from pyspark.sql import types as T
+    out_schema = T.StructType(sentences.schema.fields + TAGGED_SCHEMA.fields[-2:])
+    schema = to_arrow_schema(out_schema)
+    cap = ak.MEMO_CAP
 
-    out_schema = T.StructType(list(sentences.schema.fields) + [
-        T.StructField("pos_tags", T.ArrayType(T.StringType())),
-        T.StructField("ner_tags", T.ArrayType(T.StringType())),
-    ])
+    def predict_unique(model, feats: list[list[str]],
+                       memo: ak.TaskMemo) -> list[list[str]]:
+        # per-task memo: identical feature sequences decoded once per task —
+        # the DNN analog of the tokenizer operators' text memo (real web
+        # corpora are duplicate-heavy; the decode is deterministic and
+        # batch-invariant — the invariance tag_sentences_bilstm_dedup is
+        # already pinned on — so results are identical to predicting every
+        # copy). The batch's misses are decoded in ONE predict_tags call; the
+        # local dict dedups them and keeps their tags even if the capped memo
+        # evicts some of them before the batch is assembled.
+        keys = [tuple(fs) for fs in feats]
+        out = [memo.get(k) for k in keys]
+        miss = {k: None for k, tags in zip(keys, out) if tags is None}
+        if miss:
+            for k, tags in zip(list(miss), model.predict_tags([list(k) for k in miss])):
+                memo.put(k, tags)
+                miss[k] = tags
+            out = [miss[k] if tags is None else tags for k, tags in zip(keys, out)]
+        return out
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pos_model = ak.cached_from_broadcast(pos_model_bc, backend_loader)
+        ner_model = ak.cached_from_broadcast(ner_model_bc, backend_loader)
+        pos_memo, ner_memo = ak.TaskMemo(cap), ak.TaskMemo(cap)
+        for b in batches:
+            offs, f = ak.token_fields(b, ("ending_pos", "ending_ner", "input_type",
+                                          "extra"))
+            ep, en = f["ending_pos"], f["ending_ner"]
+            itypes, extras = f["input_type"], f["extra"]
+            bounds = [(offs[r], offs[r + 1]) for r in range(b.num_rows)]
+            pos_raw = predict_unique(pos_model, [ep[lo:hi] for lo, hi in bounds],
+                                     pos_memo)
+            ner_raw = predict_unique(ner_model, [en[lo:hi] for lo, hi in bounds],
+                                     ner_memo)
+            pos_col = [_correct_output_types_flat(itypes, extras, lo, hi, tags)
+                       for (lo, hi), tags in zip(bounds, pos_raw)]
+            yield ak.record_batch(dict(zip(b.schema.names, b.columns),
+                                       pos_tags=pos_col, ner_tags=ner_raw), schema)
+
     return sentences.mapInArrow(run, schema=out_schema)
 
 
@@ -323,8 +260,8 @@ def tag_sentences_bilstm_dedup(sentences: DataFrame, pos_model_bc, ner_model_bc,
     operator runs on the distinct dim only → equi-join back on the same
     projection computed JVM-side on the instance frame. AQE picks broadcast
     when the tagged dim is small enough and falls back to a shuffle join when
-    the distinct count grows with the corpus — both sides scale. The per-batch
-    memo inside tag_sentences_bilstm is the batch-LOCAL version of the same
+    the distinct count grows with the corpus — both sides scale. The per-task
+    memo inside tag_sentences_bilstm is the task-LOCAL version of the same
     idea; this amortizes across the whole corpus at the price of one dedup
     shuffle, the right trade whenever decode ≫ shuffle (any DNN regimen).
     Identical projections ⇒ identical tags, so the join-back is exact — the

@@ -11,6 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from . import arrowkernel as ak
 
 # Java \s ≡ [ \t\n\x0B\f\r] exactly; RE2 (DuckDB) \s EXCLUDES \x0B. Spelling the
 # class out makes the Spark expression and every DuckDB oracle agree on ALL inputs
@@ -187,57 +191,33 @@ def extract_urls(text_spans: DataFrame) -> DataFrame:
     """(doc_id, span_idx, text) → one row per detected URL/Email span:
     (doc_id, span_idx, url_idx, url_type, url_value, domain). Runs the reference's
     URL/Email state machine (urldetect.allocate_urls, UrlDetector.cs) per span in
-    an Arrow batch with a batch-local text memo (duplicate-heavy corpora), plus the
+    an Arrow batch with a per-task text memo (duplicate-heavy corpora), plus the
     domain key domain-blocklist curation aggregates/filters on. No shuffle —
     narrow mapInArrow; consumers group by ``domain``."""
-    import pyarrow as pa
-
     from ..urldetect import allocate_urls, url_domain
 
+    ddl = ("doc_id string, span_idx int, url_idx int, url_type string, "
+           "url_value string, domain string")
+    schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+    cap = ak.MEMO_CAP
+
     def run(batches):
-        # per-TASK text memo (was per-batch) — cost-only, results unchanged
-        memo: dict[str, list] = {}
+        memo = ak.TaskMemo(cap)
         for b in batches:
-            if len(memo) > 65536:
-                memo.clear()
-            doc_ids = b.column(b.schema.get_field_index("doc_id")).to_pylist()
-            span_idxs = b.column(b.schema.get_field_index("span_idx")).to_pylist()
-            texts = b.column(b.schema.get_field_index("text")).to_pylist()
-            cols: dict[str, list] = {k: [] for k in
-                                     ("doc_id", "span_idx", "url_idx", "url_type",
-                                      "url_value", "domain")}
-            for doc_id, span_idx, text in zip(doc_ids, span_idxs, texts):
+            rows: list[tuple] = []
+            for doc_id, span_idx, text in zip(
+                    *(b.column(c).to_pylist() for c in ("doc_id", "span_idx", "text"))):
                 if text is None:
                     continue
                 spans = memo.get(text)
                 if spans is None:
-                    spans = [(s.type, s.value(text),
-                              url_domain(s.value(text), s.type))
+                    spans = [(s.type, s.value(text), url_domain(s.value(text), s.type))
                              for s in allocate_urls(text)]
-                    memo[text] = spans
-                for i, (utype, uval, dom) in enumerate(spans):
-                    cols["doc_id"].append(doc_id)
-                    cols["span_idx"].append(span_idx)
-                    cols["url_idx"].append(i)
-                    cols["url_type"].append(utype)
-                    cols["url_value"].append(uval)
-                    cols["domain"].append(dom)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["span_idx"], pa.int32()),
-                 pa.array(cols["url_idx"], pa.int32()),
-                 pa.array(cols["url_type"], pa.string()),
-                 pa.array(cols["url_value"], pa.string()),
-                 pa.array(cols["domain"], pa.string())],
-                names=["doc_id", "span_idx", "url_idx", "url_type", "url_value",
-                       "domain"],
-            )
+                    memo.put(text, spans)
+                rows += [(doc_id, span_idx, i, *u) for i, u in enumerate(spans)]
+            yield ak.rows_batch(rows, schema)
 
-    return text_spans.mapInArrow(
-        run,
-        schema="doc_id string, span_idx int, url_idx int, url_type string, "
-               "url_value string, domain string",
-    )
+    return text_spans.mapInArrow(run, schema=ddl)
 
 
 def redact_pii(text_spans: DataFrame, min_digits: int = 4) -> DataFrame:
@@ -246,53 +226,31 @@ def redact_pii(text_spans: DataFrame, min_digits: int = 4) -> DataFrame:
     web-corpus pipeline runs. URL/Email spans detected by the reference's state
     machine (urldetect.allocate_urls) become placeholder tokens; residual digit runs
     ≥ ``min_digits`` become <NUM> (urldetect.redact_text is the shared pure kernel).
-    Narrow mapInArrow with a batch-local text memo (duplicate-heavy corpora) — no
+    Narrow mapInArrow with a per-task text memo (duplicate-heavy corpora) — no
     shuffle; the redacted column feeds tokenization directly."""
-    import pyarrow as pa
-
     from ..urldetect import redact_text
 
+    ddl = ("doc_id string, span_idx int, text_redacted string, n_urls int, "
+           "n_emails int, n_digit_runs int")
+    schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+    cap = ak.MEMO_CAP
+
     def run(batches):
-        # per-TASK text memo (was per-batch) — cost-only, results unchanged
-        memo: dict[str, tuple] = {}
+        memo = ak.TaskMemo(cap)
         for b in batches:
-            if len(memo) > 65536:
-                memo.clear()
-            doc_ids = b.column(b.schema.get_field_index("doc_id")).to_pylist()
-            span_idxs = b.column(b.schema.get_field_index("span_idx")).to_pylist()
-            texts = b.column(b.schema.get_field_index("text")).to_pylist()
-            cols: dict[str, list] = {k: [] for k in
-                                     ("doc_id", "span_idx", "text_redacted",
-                                      "n_urls", "n_emails", "n_digit_runs")}
-            for doc_id, span_idx, text in zip(doc_ids, span_idxs, texts):
+            rows: list[tuple] = []
+            for doc_id, span_idx, text in zip(
+                    *(b.column(c).to_pylist() for c in ("doc_id", "span_idx", "text"))):
                 if text is None:
                     continue
                 red = memo.get(text)
                 if red is None:
                     red = redact_text(text, min_digits)
-                    memo[text] = red
-                cols["doc_id"].append(doc_id)
-                cols["span_idx"].append(span_idx)
-                cols["text_redacted"].append(red[0])
-                cols["n_urls"].append(red[1])
-                cols["n_emails"].append(red[2])
-                cols["n_digit_runs"].append(red[3])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["span_idx"], pa.int32()),
-                 pa.array(cols["text_redacted"], pa.string()),
-                 pa.array(cols["n_urls"], pa.int32()),
-                 pa.array(cols["n_emails"], pa.int32()),
-                 pa.array(cols["n_digit_runs"], pa.int32())],
-                names=["doc_id", "span_idx", "text_redacted", "n_urls",
-                       "n_emails", "n_digit_runs"],
-            )
+                    memo.put(text, red)
+                rows.append((doc_id, span_idx, *red))
+            yield ak.rows_batch(rows, schema)
 
-    return text_spans.mapInArrow(
-        run,
-        schema="doc_id string, span_idx int, text_redacted string, n_urls int, "
-               "n_emails int, n_digit_runs int",
-    )
+    return text_spans.mapInArrow(run, schema=ddl)
 
 
 def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:

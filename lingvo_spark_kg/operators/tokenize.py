@@ -1,14 +1,14 @@
 """Tokenize operator: docs → sentences (narrow, shuffle-free).
 
-Spark shape (SURVEY.md §2.8): ``mapInPandas`` over docs explodes text spans into
+Spark shape (SURVEY.md §2.8): ``mapInArrow`` over docs explodes text spans into
 sentence rows with per-sentence token arrays, so each whole sentence rides one Arrow
 row into downstream model UDFs (the reference's per-thread Tokenizer
 ConsoleDemo/Program.cs:254-256 becomes partition parallelism). Media spans are not
 routed through Python at all — ``media_spans()`` is a pure column projection
 (posexplode + filter), which Catalyst prunes to the columns it needs.
 
-Within one task, identical span texts are tokenized once (a per-task dict memo,
-cleared when it outgrows its cap) — the task-local analog of the reference's
+Within one task, identical span texts are tokenized once (the per-task LRU
+``arrowkernel.TaskMemo``) — the task-local analog of the reference's
 thread-local tokenizer buffer reuse (Tokenizer.cs:276-284). The memo changes cost,
 never output: a span's sentences are a pure function of its text, so the result is
 the same under any partitioning or batching.
@@ -18,11 +18,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..tokenizer import run_simple_sents_allocate, to_pos_tagger_token
+from . import arrowkernel as ak
 from .schemas import SENTENCES_SCHEMA
 
 POS_MAX_ENDING_LENGTH = 4        # ConsoleDemo/predict.json:7
@@ -65,100 +67,50 @@ def _tokenize_text(text: str, replace_nums: bool,
 def tokenize_docs(docs: DataFrame, replace_nums: bool = True,
                   sent_mode: str = "simple") -> DataFrame:
     """docs(doc_id, spans) → sentences(doc_id, span_idx, sent_idx, sent_start,
-    sent_len, tokens). Arrow-native (mapInArrow) with JVM-side media-span pruning —
-    same hot-path shape as the fused triples operator."""
-    import pyarrow as pa
-
-    docs = docs.select(
-        "doc_id",
-        F.expr(
-            "transform(filter(spans, s -> s.kind = 'text' AND s.text IS NOT NULL),"
-            " s -> struct(s.text AS text, s.offset AS offset))"
-        ).alias("spans"),
-    ).where(F.size("spans") > 0)
-
-    token_type = pa.struct([
-        ("tok_idx", pa.int32()), ("start", pa.int32()), ("length", pa.int32()),
-        ("value", pa.string()), ("orig", pa.string()), ("input_type", pa.string()),
-        ("extra", pa.int32()), ("ending_pos", pa.string()), ("ending_ner", pa.string()),
-    ])
-
-    _TOK_FIELDS = ("tok_idx", "start", "length", "value", "orig", "input_type",
-                   "extra", "ending_pos", "ending_ner")
-    _TOK_PA = {"tok_idx": pa.int32(), "start": pa.int32(), "length": pa.int32(),
-               "value": pa.string(), "orig": pa.string(),
-               "input_type": pa.string(), "extra": pa.int32(),
-               "ending_pos": pa.string(), "ending_ner": pa.string()}
+    sent_len, tokens). Arrow-native (mapInArrow) over the JVM-side text-span
+    projection — same hot-path shape as the fused triples operator."""
+    schema = to_arrow_schema(SENTENCES_SCHEMA)
+    tokens_type = schema.field("tokens").type
+    tok_fields = list(tokens_type.value_type)
+    cap = ak.TOKENIZE_MEMO_CAP
 
     def run(batches) -> "Iterator[pa.RecordBatch]":
-        # per-TASK memo (was per-batch): identical span texts tokenize once
-        # per task — output is unchanged (pure function of the text), the
-        # memo only changes cost; capped so mostly-unique corpora stay bounded.
         # Memoized sentences carry their token fields as FLAT per-field lists:
         # the output batch is assembled from flat child arrays + list offsets
         # (docsgen's construction — no per-token dict tree for pyarrow to
         # walk, and memo hits extend lists C-side instead of re-walking dicts)
-        memo: dict[str, list] = {}
+        memo = ak.TaskMemo(cap)
         for b in batches:
-            if len(memo) > 16384:
-                memo.clear()
-            cols: dict[str, list] = {k: [] for k in
-                                     ("doc_id", "span_idx", "sent_idx", "sent_start",
-                                      "sent_len")}
-            tok_cols: dict[str, list] = {k: [] for k in _TOK_FIELDS}
+            cols: dict[str, list] = {k: [] for k in schema.names if k != "tokens"}
+            tok_cols: dict[str, list] = {f.name: [] for f in tok_fields}
             tok_offsets = [0]
-            doc_ids = b.column(0).to_pylist()
-            spans_col = b.column(1)
-            if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
-                spans_col = spans_col.combine_chunks()
-            if spans_col.null_count:  # upstream size(spans)>0 filter removes nulls
-                raise ValueError("docs.spans must not contain null rows")
-            # .values (NOT .flatten()) so indexes line up with the raw offsets buffer
-            # even if the batch arrives sliced — flatten() rebases, offsets don't
-            flat = spans_col.values
-            texts = flat.field("text").to_pylist()
-            offs = flat.field("offset").to_pylist()
-            list_offsets = spans_col.offsets.to_pylist()
-            for row, doc_id in enumerate(doc_ids):
-                for j in range(list_offsets[row], list_offsets[row + 1]):
-                    text = texts[j]
-                    sents = memo.get(text)
-                    if sents is None:
-                        sents = [
-                            (sent_idx, start, length,
-                             {f: [t[f] for t in toks] for f in _TOK_FIELDS},
-                             len(toks))
-                            for sent_idx, start, length, toks
-                            in _tokenize_text(text, replace_nums, sent_mode)
-                        ]
-                        memo[text] = sents
-                    for sent_idx, start, length, fields, n_toks in sents:
-                        cols["doc_id"].append(doc_id)
-                        cols["span_idx"].append(offs[j])
-                        cols["sent_idx"].append(sent_idx)
-                        cols["sent_start"].append(start)
-                        cols["sent_len"].append(length)
-                        for f in _TOK_FIELDS:
-                            tok_cols[f].extend(fields[f])
-                        tok_offsets.append(tok_offsets[-1] + n_toks)
+            for doc_id, span_idx, text in ak.iter_text_spans(b):
+                sents = memo.get(text)
+                if sents is None:
+                    sents = [
+                        (sent_idx, start, length,
+                         {f: [t[f] for t in toks] for f in tok_cols}, len(toks))
+                        for sent_idx, start, length, toks
+                        in _tokenize_text(text, replace_nums, sent_mode)
+                    ]
+                    memo.put(text, sents)
+                for sent_idx, start, length, fields, n_toks in sents:
+                    cols["doc_id"].append(doc_id)
+                    cols["span_idx"].append(span_idx)
+                    cols["sent_idx"].append(sent_idx)
+                    cols["sent_start"].append(start)
+                    cols["sent_len"].append(length)
+                    for f, values in fields.items():
+                        tok_cols[f].extend(values)
+                    tok_offsets.append(tok_offsets[-1] + n_toks)
             struct = pa.StructArray.from_arrays(
-                [pa.array(tok_cols[f], _TOK_PA[f]) for f in _TOK_FIELDS],
-                fields=list(token_type))
-            tokens_arr = pa.ListArray.from_arrays(
-                pa.array(tok_offsets, pa.int32()), struct)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["doc_id"], pa.string()),
-                    pa.array(cols["span_idx"], pa.int32()),
-                    pa.array(cols["sent_idx"], pa.int32()),
-                    pa.array(cols["sent_start"], pa.int32()),
-                    pa.array(cols["sent_len"], pa.int32()),
-                    tokens_arr,
-                ],
-                names=["doc_id", "span_idx", "sent_idx", "sent_start", "sent_len", "tokens"],
-            )
+                [pa.array(tok_cols[f.name], f.type) for f in tok_fields],
+                fields=tok_fields)
+            cols["tokens"] = pa.ListArray.from_arrays(
+                pa.array(tok_offsets, pa.int32()), struct, type=tokens_type)
+            yield ak.record_batch(cols, schema)
 
-    return docs.mapInArrow(run, schema=SENTENCES_SCHEMA)
+    return ak.text_spans(docs).mapInArrow(run, schema=SENTENCES_SCHEMA)
 
 
 def media_spans(docs: DataFrame) -> DataFrame:

@@ -293,3 +293,31 @@ def test_pagerank_iteration_plan_shape(spark):
     assert "partial_sum" in plan
     # checkpoint truncation: share/nodes enter as scans of existing RDDs
     assert "Scan ExistingRDD" in plan
+
+
+def test_text_kernels_docs_scan_prunes_media_ref(spark, gaz_bc, tmp_path):
+    """tokenize_docs and docs_to_triples_fused read the docs through
+    arrowkernel.text_spans: span fields zipped from direct extractions, so the
+    parquet scan reads kind/text/offset and never decodes media_ref. The
+    projection keeps the rows and schema of the lambda form it replaced."""
+    from lingvo_spark_kg.operators.arrowkernel import text_spans
+    from lingvo_spark_kg.operators.docsgen import generate_docs
+    from lingvo_spark_kg.operators.tokenize import tokenize_docs
+    from lingvo_spark_kg.operators.triples import docs_to_triples_fused
+
+    path = str(tmp_path / "docs")
+    generate_docs(spark, 200, seed=42).write.parquet(path)
+    docs = spark.read.parquet(path)
+    for df in (tokenize_docs(docs), docs_to_triples_fused(docs, gaz_bc)):
+        read = re.findall(r"ReadSchema: (struct<.*>)", _plan(df, spark))
+        assert len(read) == 1, read
+        assert all(f in read[0] for f in ("kind", "text", "offset")), read
+        assert "media_ref" not in read[0], read
+    lam = docs.select("doc_id", F.expr(
+        "transform(filter(spans, s -> s.kind = 'text' AND s.text IS NOT NULL),"
+        " s -> struct(s.text AS text, s.offset AS offset))").alias("spans")
+    ).where(F.size("spans") > 0)
+    new = text_spans(docs)
+    assert new.schema == lam.schema
+    assert new.count() == lam.count() > 0
+    assert new.exceptAll(lam).count() == 0 and lam.exceptAll(new).count() == 0
