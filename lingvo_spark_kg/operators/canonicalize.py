@@ -8,12 +8,14 @@
    "козлов", "с . козлов" without an O(n²) cross join.
 
 Components label each vertex with the min vertex id it reaches, on one of two
-paths chosen by the edge frame's plan-size estimate against
-``spark.sql.autoBroadcastJoinThreshold`` (``smallgraph.fits_broadcast``):
+paths chosen by one measured collect of the edge frame
+(``smallgraph.small_arrow``):
 
-* within the budget, one Arrow collect and a vectorized numpy min-label kernel
-  on the driver (``_components_arrow``), returned as a LocalRelation;
-* over it, min-label propagation in Spark (the dataframe form of
+* up to ``smallgraph.KERNEL_ROWS`` edges whose Arrow bytes fit
+  ``spark.sql.autoBroadcastJoinThreshold``, that collect feeds a vectorized
+  numpy min-label kernel on the driver (``_components_arrow``), returned as a
+  LocalRelation;
+* over either, min-label propagation in Spark (the dataframe form of
   large-star/small-star): each iteration joins labels to the symmetric edge
   list, takes the min neighbor label, and is one job of the shared fixpoint
   driver (``fixpoint.py``: ``localCheckpoint`` cuts lineage, the changed count
@@ -30,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint, observed
-from .smallgraph import encode, fits_broadcast, id_frame
+from .smallgraph import KERNEL_ROWS, encode, id_frame, small_arrow
 
 
 def _mention_vertices(links: DataFrame) -> DataFrame:
@@ -134,13 +136,16 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     """(v, component) for every vertex appearing in edges; component = min vertex id
     reachable.
 
-    When the (src, dst) frame's size estimate fits
-    ``spark.sql.autoBroadcastJoinThreshold``, it is collected once through Arrow
-    and labelled on the driver (``_components_arrow``). Otherwise a checkpointed
-    Spark loop runs until no label changes. ``max_iter``, ``checkpoint_dir``,
-    ``checkpoint_every`` and ``on_iteration`` apply to the Spark loop only: the
-    driver kernel keeps no iteration state to lose and always runs to its exact
-    fixpoint, so it never raises for ``max_iter``.
+    The (src, dst) frame is checkpointed lazily and probed by one bounded
+    Arrow collect (``smallgraph.small_arrow``). When it holds at most
+    ``smallgraph.KERNEL_ROWS`` edges within the broadcast budget, that collect
+    is labelled on the driver (``_components_arrow``). Otherwise a
+    checkpointed Spark loop, built on the checkpoint the probe materialized
+    (so the edges' plan runs once), runs until no label changes.
+    ``max_iter``, ``checkpoint_dir``, ``checkpoint_every`` and ``on_iteration``
+    apply to the Spark loop only: the driver kernel keeps no iteration state
+    to lose and always runs to its exact fixpoint, so it never raises for
+    ``max_iter``.
 
     Durability: ``localCheckpoint`` (the default) cuts lineage but stores blocks on
     executors — fine in local mode, but an executor loss at hour N of a 100 TB run
@@ -156,14 +161,14 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     import os
 
     spark = edges.sparkSession
-    pairs = edges.select("src", "dst")
-    if fits_broadcast(pairs):
-        arcs = pairs.toArrow()
+    pairs = edges.select("src", "dst").localCheckpoint(eager=False)
+    arcs = small_arrow(pairs, KERNEL_ROWS)
+    if arcs is not None:
         v, component = _components_arrow(arcs["src"], arcs["dst"])
         return id_frame(spark, edges.schema["src"].dataType,
                         v=v, component=component)
     sym = pairs.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
     # keyed on the PER-ITERATION join key (sym.dst == labels.v): the edge side
     # is laid out once here for the loop instead of re-shuffled by dst every

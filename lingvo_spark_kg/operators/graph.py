@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint, observed, unchanged
-from .smallgraph import csr, encode, fits_broadcast, id_frame
+from .smallgraph import KERNEL_ROWS, csr, encode, id_frame, small_arrow
 
 N_BUCKETS_DEFAULT = 32
 PAGERANK_CHECKPOINT_EVERY = 5
@@ -467,9 +467,9 @@ def components(edges: DataFrame, max_iter: int = 25,
     component = min reachable node id — the fragmentation read a curation pass
     takes before deciding whether extraction produced one knowledge graph or an
     archipelago. Thin adapter over canonicalize.connected_components: the
-    driver kernel when the edges fit the broadcast budget, else the
-    checkpointed ping-pong loop (durable resume via ``checkpoint_dir``,
-    convergence-observed)."""
+    driver kernel when one bounded collect finds the edges small
+    (``smallgraph.small_arrow``), else the checkpointed ping-pong loop
+    (durable resume via ``checkpoint_dir``, convergence-observed)."""
     from .canonicalize import connected_components
 
     e = edges.select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
@@ -1372,33 +1372,30 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         ``*`` adds the zero-length (C, C) row exactly like the generic ident
         arm filtered to C.
 
-        Two paths, chosen by the step adjacency's plan-size estimate against
-        ``spark.sql.autoBroadcastJoinThreshold`` (``smallgraph.fits_broadcast``):
+        Two paths, chosen by one measured collect of the lazily checkpointed
+        step adjacency (``smallgraph.small_arrow``):
 
-        * within the budget, one job collects the adjacency through Arrow
-          and the BFS runs vectorized on the driver (:func:`_reach_arrow`);
-          the reached set comes back as a LocalRelation, whatever the depth;
-        * over it, a distributed frontier loop: per hop one equi-join of the
-          frontier against the key-partitioned adjacency, a distinct and a
-          null-safe anti-join against the settled nodes, checkpointed with
-          the emptiness check riding the checkpoint. If the frontier has not
+        * up to ``smallgraph.KERNEL_ROWS`` arcs within the broadcast budget,
+          that collect is the adjacency and the BFS runs vectorized on the
+          driver (:func:`_reach_arrow`); the reached set comes back as a
+          LocalRelation, whatever the depth;
+        * over either, a distributed frontier loop over the checkpoint the
+          collect materialized: per hop one equi-join of the frontier
+          against the key-partitioned adjacency, a distinct and a null-safe
+          anti-join against the settled nodes, checkpointed with the
+          emptiness check riding the checkpoint. If the frontier has not
           drained after 128 hops it returns None and the caller falls back
           to the generic closure — a pathologically deep chain is exactly
           what log-round doubling is for."""
-        step = step_pairs(spec)
-        if inv:
-            step = step.select(F.col("dst_id").alias("src_id"),
-                               F.col("src_id").alias("dst_id"))
         # follow edges forward from a constant subject, backward from a
-        # constant object
-        if const_is_obj:
-            step = step.select(F.col("dst_id").alias("node"),
-                               F.col("src_id").alias("nbr"))
-        else:
-            step = step.select(F.col("src_id").alias("node"),
-                               F.col("dst_id").alias("nbr"))
-        if fits_broadcast(step):
-            arcs = step.toArrow()
+        # constant object; an inverse step swaps the direction once more
+        head, tail = (("dst_id", "src_id") if inv != const_is_obj
+                      else ("src_id", "dst_id"))
+        step = step_pairs(spec).select(
+            F.col(head).alias("node"),
+            F.col(tail).alias("nbr")).localCheckpoint(eager=False)
+        arcs = small_arrow(step, KERNEL_ROWS)
+        if arcs is not None:
             reached = _reach_arrow(arcs["node"], arcs["nbr"], const)
             if mod == "*":
                 reached = pc.unique(pa.concat_arrays(

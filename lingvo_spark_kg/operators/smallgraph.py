@@ -1,14 +1,17 @@
 """The shared pieces of the driver-resident graph kernels.
 
-A graph operator whose edge frame fits the broadcast budget
-(:func:`fits_broadcast`) collects it once through Arrow, encodes the node ids
-to dense codes (:func:`encode`), runs a vectorized numpy kernel on the
-driver and returns its result as a LocalRelation (:func:`id_frame`); over the
-budget it keeps its distributed Spark loop. The kernels themselves live next
-to their Spark loops: ``graph._reach_arrow`` and
-``canonicalize._components_arrow``. ``KgPipeline.table("edges")`` uses the
-same gate, :data:`ONE_PARTITION_ROWS` and :func:`local_frame` to serve lookups
-from a session-resident copy of a small committed edges table.
+Every "is this frame small enough for the driver?" decision is one measured
+collect, :func:`small_arrow`: at most a row cap plus one row through Arrow,
+kept when it is within the cap and its Arrow bytes are within the broadcast
+budget. Under it a graph operator encodes the node ids to dense codes
+(:func:`encode`), runs a vectorized numpy kernel on the driver over the
+collected table and returns its result as a LocalRelation (:func:`id_frame`);
+over it the operator keeps its distributed Spark loop. The kernels live next
+to their Spark loops, ``graph._reach_arrow`` and
+``canonicalize._components_arrow``, and share :data:`KERNEL_ROWS`.
+``KgPipeline.table("edges")`` makes the same decision under
+:data:`ONE_PARTITION_ROWS` and serves lookups from the collected table as a
+session-resident copy (:func:`local_frame`).
 """
 
 from __future__ import annotations
@@ -33,6 +36,16 @@ from pyspark.sql.pandas.types import to_arrow_type
 # crossover follows the row count, not the parquet size (0.1 MB without
 # sketches, 0.4 MB with them at 10.3k rows). See docs/SCALE.md.
 ONE_PARTITION_ROWS = 10_000
+
+# Arcs up to which a graph kernel (CC, constant-endpoint reach) runs on the
+# driver. Measured with tools/kernel_crossover.py on a 4-core VM (3 GB heap):
+# CC over star-shaped arc lists with 26-byte string ids, read from parquet,
+# took 4.8 s, 4.9 s and 17.2 s in the Spark loop at 10^4, 10^5 and 10^6 arcs,
+# and 0.13 s, 0.51 s and 2.9 s as collect plus kernel. At 10^6 arcs the
+# collected table is 57 MB, near the 64 MB default broadcast budget, so for
+# ids of that length the byte check and this cap meet there. See
+# docs/SCALE.md.
+KERNEL_ROWS = 1_000_000
 
 
 def local_frame(spark, table: pa.Table, schema: T.StructType) -> DataFrame:
@@ -68,11 +81,23 @@ def broadcast_budget(spark) -> int:
         .autoBroadcastJoinThreshold()
 
 
-def fits_broadcast(df: DataFrame) -> bool:
-    """Whether the optimizer's size estimate of ``df`` is within
-    :func:`broadcast_budget` (an unknown size estimates as huge)."""
-    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() \
-        <= broadcast_budget(df.sparkSession)
+def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` collected through Arrow when it is small, else None. Small means
+    at most ``max_rows`` rows whose Arrow table is within
+    :func:`broadcast_budget` bytes: one job collects at most ``max_rows + 1``
+    rows and measures them, so a frame whose size the optimizer cannot
+    estimate (a list- or join-built one) is judged by its data. Under the
+    off switch it returns None and runs no job. A caller that falls back to
+    a Spark loop over ``df`` should checkpoint ``df`` lazily first, so the
+    loop reads what this collect materialized instead of re-running its
+    plan."""
+    budget = broadcast_budget(df.sparkSession)
+    if budget < 0:
+        return None
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows <= max_rows and table.nbytes <= budget:
+        return table
+    return None
 
 
 def encode(src: pa.ChunkedArray, dst: pa.ChunkedArray):

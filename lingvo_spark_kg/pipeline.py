@@ -297,16 +297,17 @@ class KgPipeline:
 
     def _resident_edges(self, name: str) -> DataFrame:
         """The physical edges table ``name`` as a one-partition LocalRelation
-        (``smallgraph.local_frame``) when its parquet read fits the broadcast
-        budget and holds at most ``smallgraph.ONE_PARTITION_ROWS`` rows, else
-        that read. Lookups are planned and run against the copy: an aggregate
-        over it needs no exchange, and a repeat call lists no files. Deciding
-        runs one job, a collect of at most the cap plus one row. The result
-        either way is memoized for the last table read, keyed by ``name``, the
-        writer's ``version`` token and the budget, so a rewrite by any writer
-        — a rebuild by another pipeline object included — is read afresh, and
-        so is every read once the budget changes; a writer without a token
-        (None) gets the plain read every time."""
+        (``smallgraph.local_frame``) when its parquet read holds at most
+        ``smallgraph.ONE_PARTITION_ROWS`` rows within the broadcast budget's
+        bytes, else that read. Lookups are planned and run against the copy:
+        an aggregate over it needs no exchange, and a repeat call lists no
+        files. Deciding runs one job, ``smallgraph.small_arrow``'s collect of
+        at most the cap plus one row, which is the copy when it is kept. The
+        result either way is memoized for the last table read, keyed by
+        ``name``, the writer's ``version`` token and the budget, so a rewrite
+        by any writer — a rebuild by another pipeline object included — is
+        read afresh, and so is every read once the budget changes; a writer
+        without a token (None) gets the plain read every time."""
         w = self._writer()
         # the token is taken BEFORE the read: a rewrite racing the collect then
         # leaves a memo whose key is already stale, never a stale copy under a
@@ -320,11 +321,9 @@ class KgPipeline:
         df = w.read(self.spark, name)
         if key[1] is None:
             return df
-        if smallgraph.fits_broadcast(df):
-            cap = smallgraph.ONE_PARTITION_ROWS
-            head = df.limit(cap + 1).toArrow()
-            if head.num_rows <= cap:
-                df = smallgraph.local_frame(self.spark, head, df.schema)
+        head = smallgraph.small_arrow(df, smallgraph.ONE_PARTITION_ROWS)
+        if head is not None:
+            df = smallgraph.local_frame(self.spark, head, df.schema)
         self._edges_memo = (key, df)
         return df
 

@@ -2,6 +2,7 @@
 policy, one driver action budget per operator call whatever the round count,
 and bounded plans for the lazily unioned frontier stores."""
 
+import contextlib
 import warnings
 
 import pytest
@@ -46,10 +47,11 @@ _BUDGETED = {
 
 @pytest.mark.parametrize("op", sorted(_BUDGETED) + [
     "connected_components", "bfs_distances", "shortest_path_counts"])
-def test_non_convergence_policy(spark, op):
+def test_non_convergence_policy(spark, spark_loop, op):
     """Budget-bounded operators warn once, naming their budget; CC raises
     (truncated labels merge or split canonical ids); a BFS radius is the
-    answer's extent, not a budget, so running to it is silent."""
+    answer's extent, not a budget, so running to it is silent. CC runs with
+    the broadcast budget off: only its Spark loop has an iteration budget."""
     edges = _chain(spark, 6)
     if op in _BUDGETED:
         run, budget = _BUDGETED[op]
@@ -60,7 +62,8 @@ def test_non_convergence_policy(spark, op):
         return
     if op == "connected_components":
         e = edges.selectExpr("src_id AS src", "dst_id AS dst")
-        with pytest.raises(RuntimeError, match="did not converge"):
+        with spark_loop(), pytest.raises(RuntimeError,
+                                         match="did not converge"):
             canonicalize.connected_components(e, max_iter=1)
         return
     with warnings.catch_warnings(record=True) as rec:
@@ -71,16 +74,6 @@ def test_non_convergence_policy(spark, op):
             out = graph.shortest_path_counts(edges, [0], max_hops=1)
         assert out.count() == 2
     assert not [w for w in rec if issubclass(w.category, NotConvergedWarning)]
-
-
-def _reach_distributed(spark, e):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    budget = spark.conf.get(key)
-    spark.conf.set(key, "-1")   # over the budget: the per-hop Spark loop
-    try:
-        return graph.match_pattern(e, [(0, "p+", "?y")])
-    finally:
-        spark.conf.set(key, budget)
 
 
 _CONVERTED = {
@@ -96,15 +89,20 @@ _CONVERTED = {
         e, max_hops=12),
     "harmonic_centrality": lambda s, e: graph.harmonic_centrality(
         e, max_hops=12),
-    "reach_distributed": _reach_distributed,
+    "reach_distributed": lambda s, e: graph.match_pattern(
+        e, [(0, "p+", "?y")]),
 }
+# these take a driver kernel on small inputs; the test pins their Spark loops
+_LOOP_ONLY = {"components", "reach_distributed"}
 
 
 @pytest.mark.parametrize("op", sorted(_CONVERTED))
-def test_driver_actions_do_not_grow_with_rounds(spark, monkeypatch, op):
+def test_driver_actions_do_not_grow_with_rounds(spark, monkeypatch,
+                                                spark_loop, op):
     """Every round's convergence metrics ride its materializing job, so the
     collect/count/first actions an operator call runs are the same on a
-    4-chain (few rounds) and a 12-chain (many rounds)."""
+    4-chain (few rounds) and a 12-chain (many rounds). The operators with a
+    driver kernel run with the broadcast budget off, so their loops run."""
     calls = []
     frame_cls = type(spark.range(1))   # the concrete class defines the actions
     for name in ("collect", "count", "first"):
@@ -119,7 +117,8 @@ def test_driver_actions_do_not_grow_with_rounds(spark, monkeypatch, op):
     for n in (4, 12):
         edges = _chain(spark, n)
         calls.clear()
-        _CONVERTED[op](spark, edges)
+        with spark_loop() if op in _LOOP_ONLY else contextlib.nullcontext():
+            _CONVERTED[op](spark, edges)
         per_size.append(len(calls))
     assert per_size[0] == per_size[1], per_size
 

@@ -422,28 +422,15 @@ def test_ann_ivf_self_match_and_bounded_candidates(spark):
     assert sum(sorted(sizes.values(), reverse=True)[:4]) < emb.count()
 
 
-@pytest.fixture
-def cc_kernel_calls(monkeypatch):
-    """The calls of the driver CC kernel, recorded by a pass-through spy."""
-    calls = []
-    real = canonicalize._components_arrow
-
-    def spy(*args):
-        calls.append(args)
-        return real(*args)
-
-    monkeypatch.setattr(canonicalize, "_components_arrow", spy)
-    return calls
-
-
-def test_connected_components_durable_resume(spark, tmp_path, cc_kernel_calls):
+def test_connected_components_durable_resume(spark, tmp_path, cc_kernel_calls,
+                                             spark_loop):
     """VERDICT r1 item 7: kill between CC iterations, complete from durable state.
     A long path graph (diameter 12) forces many propagation iterations; the fault
     injector kills the run after the first durable checkpoint; the rerun must (a)
     resume past iteration 0 instead of restarting and (b) produce exactly the
-    labels of an uninterrupted run. The list-built chain has no size estimate,
-    so it never fits the broadcast budget: every call here runs the Spark loop,
-    never the driver kernel."""
+    labels of an uninterrupted run. The chain is small enough for the driver
+    kernel, so every call here, the golden one included, runs with the
+    broadcast budget off: the Spark loop, never the driver kernel."""
     n = 13
     chain = [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
@@ -456,31 +443,35 @@ def test_connected_components_durable_resume(spark, tmp_path, cc_kernel_calls):
         if it == 3:  # first durable write happens at it==1 (checkpoint_every=2)
             raise Killed()
 
-    with pytest.raises(Killed):
-        canonicalize.connected_components(
+    with spark_loop():
+        with pytest.raises(Killed):
+            canonicalize.connected_components(
+                edges, checkpoint_dir=cc_dir, checkpoint_every=2,
+                on_iteration=kill_after_checkpoint)
+        assert (tmp_path / "cc" / "cc_state.json").exists()
+
+        seen_iters = []
+        comp = {r["v"]: r["component"] for r in canonicalize.connected_components(
             edges, checkpoint_dir=cc_dir, checkpoint_every=2,
-            on_iteration=kill_after_checkpoint)
-    assert (tmp_path / "cc" / "cc_state.json").exists()
+            on_iteration=seen_iters.append).collect()}
+        assert seen_iters[0] == 2  # resumed after the it==1 durable state, not from 0
 
-    seen_iters = []
-    comp = {r["v"]: r["component"] for r in canonicalize.connected_components(
-        edges, checkpoint_dir=cc_dir, checkpoint_every=2,
-        on_iteration=seen_iters.append).collect()}
-    assert seen_iters[0] == 2  # resumed after the it==1 durable state, not from 0
-
-    golden = {r["v"]: r["component"] for r in
-              canonicalize.connected_components(edges).collect()}
+        golden = {r["v"]: r["component"] for r in
+                  canonicalize.connected_components(edges).collect()}
     assert comp == golden
     assert set(comp.values()) == {"v00"}
     assert cc_kernel_calls == []
 
 
-def test_cc_convergence_check_rides_materialization(spark, monkeypatch):
+def test_cc_convergence_check_rides_materialization(spark, monkeypatch,
+                                                    spark_loop):
     """VERDICT r2 item 8: the CC convergence check must ride the SAME job that
     materializes each iteration (Dataset.observe metrics), not a separate count
     action — at scale every extra driver round-trip per iteration is a barrier.
-    Pinned by asserting a normally-converging run performs ZERO DataFrame.count()
-    actions (the old implementation ran one every 2nd iteration)."""
+    Pinned by asserting a normally-converging run of the Spark loop (the
+    broadcast budget off, so the small chain skips the driver kernel) performs
+    ZERO DataFrame.count() actions (the old implementation ran one every 2nd
+    iteration)."""
     counts = []
     frame_cls = type(spark.range(1))   # the concrete class defines count
     orig = frame_cls.count
@@ -492,8 +483,9 @@ def test_cc_convergence_check_rides_materialization(spark, monkeypatch):
     monkeypatch.setattr(frame_cls, "count", spy)
     chain = [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(8)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
-    comp = {r["v"]: r["component"]
-            for r in canonicalize.connected_components(edges).collect()}
+    with spark_loop():
+        comp = {r["v"]: r["component"]
+                for r in canonicalize.connected_components(edges).collect()}
     assert set(comp.values()) == {"v00"}
     assert counts == []  # convergence observed inside the checkpoint jobs
 

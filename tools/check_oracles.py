@@ -8,12 +8,14 @@ Usage: python tools/check_oracles.py [sf_dir] [name1,name2,...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, ahead of any installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from lingvo_spark_kg.session import get_spark  # noqa: E402
@@ -34,8 +36,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sf_dir: str, only: set[str] | None = None) -> int:
-    import os
-
     # golden oracles (read_parquet tables) must be built for the SAME sf as the
     # spark queries; the driver compares at sf0.01 (the env default)
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir

@@ -83,16 +83,17 @@ def main(argv) -> None:
         name = f"edges_x{k}"
         w.write(scaled(base, k), name, bucket_col="bucket", n_buckets=8)
         parquet = w.read(spark, name)
-        copy = spark.createDataFrame(parquet.toArrow(), parquet.schema).coalesce(1)
+        table = parquet.toArrow()
+        copy = spark.createDataFrame(table, parquet.schema).coalesce(1)
         sides = {"parquet": parquet, "copy": copy}
         lookups = {s: [] for s in sides}
         for r in range(reps):
             for s in (sides if r % 2 == 0 else reversed(list(sides))):
                 lookups[s].append(timed(p, plan, sides[s], LOOKUPS))
-        out = {"k": k, "rows": parquet.count(),
-               "parquet_mb": round(parquet._jdf.queryExecution().optimizedPlan()
-                                   .stats().sizeInBytes() / 2**20, 2),
-               "fits_budget": smallgraph.fits_broadcast(parquet)}
+        out = {"k": k, "rows": table.num_rows,
+               "arrow_mb": round(table.nbytes / 2**20, 2),
+               "fits_budget": smallgraph.small_arrow(
+                   parquet, table.num_rows) is not None}
         for s, frame in sides.items():
             out[f"lookups_{s}_s"] = round(sorted(lookups[s])[reps // 2], 3)
             out[f"analytics_{s}_s"] = round(timed(p, plan, frame, ANALYTICS), 3)
