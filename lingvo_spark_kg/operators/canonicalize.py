@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint, observed
-from .smallgraph import KERNEL_ROWS, encode, id_frame, small_arrow
+from .smallgraph import KERNEL_ROWS, encode, id_frame, reusable, small_arrow
 
 
 def _mention_vertices(links: DataFrame) -> DataFrame:
@@ -136,12 +136,13 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     """(v, component) for every vertex appearing in edges; component = min vertex id
     reachable.
 
-    The (src, dst) frame is checkpointed lazily and probed by one bounded
-    Arrow collect (``smallgraph.small_arrow``). When it holds at most
+    The (src, dst) frame is probed by one bounded Arrow collect
+    (``smallgraph.small_arrow``), checkpointed lazily first unless its rows
+    are already in its plan (``smallgraph.reusable``). When it holds at most
     ``smallgraph.KERNEL_ROWS`` edges within the broadcast budget, that collect
     is labelled on the driver (``_components_arrow``). Otherwise a
-    checkpointed Spark loop, built on the checkpoint the probe materialized
-    (so the edges' plan runs once), runs until no label changes.
+    checkpointed Spark loop, built on the frame the probe read (so the
+    edges' plan runs once), runs until no label changes.
     ``max_iter``, ``checkpoint_dir``, ``checkpoint_every`` and ``on_iteration``
     apply to the Spark loop only: the driver kernel keeps no iteration state
     to lose and always runs to its exact fixpoint, so it never raises for
@@ -161,7 +162,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     import os
 
     spark = edges.sparkSession
-    pairs = edges.select("src", "dst").localCheckpoint(eager=False)
+    pairs = reusable(edges.select("src", "dst"))
     arcs = small_arrow(pairs, KERNEL_ROWS)
     if arcs is not None:
         v, component = _components_arrow(arcs["src"], arcs["dst"])

@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint, observed, unchanged
-from .smallgraph import KERNEL_ROWS, csr, encode, id_frame, small_arrow
+from .smallgraph import (KERNEL_ROWS, csr, encode, id_frame, reusable,
+                         small_arrow)
 
 N_BUCKETS_DEFAULT = 32
 PAGERANK_CHECKPOINT_EVERY = 5
@@ -1046,6 +1047,14 @@ def _reach_arrow(node: pa.ChunkedArray, nbr: pa.ChunkedArray,
     return reached
 
 
+def _using(left: list, right: list, on: list) -> list:
+    """The column order of ``left.join(right, on)`` for any join type
+    (``right`` empty for a semi or anti join, ``on`` empty for a cross join):
+    Spark puts the USING columns first, in ``on`` order, then the other
+    columns of the left side and then those of the right."""
+    return list(on) + [c for c in list(left) + list(right) if c not in on]
+
+
 def _order_patterns(ests: list, varsets: list) -> list:
     """Greedy selectivity-aware BGP join order: start at the cheapest pattern
     (smallest estimated scan), then repeatedly take the cheapest pattern
@@ -1286,32 +1295,36 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                 .distinct().localCheckpoint(eager=False))
         return nodes_cache[0]
 
-    def step_pairs(spec):
-        """Single-hop (src, dst) pairs of one path step: a constant-predicate
-        scan, or — for a negated property set — the union of the forward scan
-        (pred ∉ forward names) and the SWAPPED scan (pred ∉ inverse names),
-        each arm present only when its element set is non-empty (SPARQL 1.1
-        §9.1's NPS translation). Bag semantics: every matching edge row is a
-        solution, so an (s, d) pair connected by two non-excluded predicates
-        binds twice — exactly the spec's triple-per-solution rule."""
+    def step_pairs(spec, out=("src_id", "dst_id")):
+        """Single-hop (src, dst) pairs of one path step, named ``out``: a
+        constant-predicate scan, or — for a negated property set — the union
+        of the forward scan (pred ∉ forward names) and the SWAPPED scan
+        (pred ∉ inverse names), each arm present only when its element set
+        is non-empty (SPARQL 1.1 §9.1's NPS translation). Bag semantics:
+        every matching edge row is a solution, so an (s, d) pair connected
+        by two non-excluded predicates binds twice — exactly the spec's
+        triple-per-solution rule."""
+        def ends(src, dst):
+            return [c if c == name else F.col(c).alias(name)
+                    for c, name in zip((src, dst), out)]
+
         if isinstance(spec, tuple):
             _, fwd, bwd = spec
             frames = []
             if fwd:
                 frames.append(
                     edges.where(~F.col("pred").isin(sorted(fwd)))
-                    .select("src_id", "dst_id"))
+                    .select(*ends("src_id", "dst_id")))
             if bwd:
                 frames.append(
                     edges.where(~F.col("pred").isin(sorted(bwd)))
-                    .select(F.col("dst_id").alias("src_id"),
-                            F.col("src_id").alias("dst_id")))
-            out = frames[0]
+                    .select(*ends("dst_id", "src_id")))
+            out_df = frames[0]
             for fr in frames[1:]:
-                out = out.unionAll(fr)
-            return out
+                out_df = out_df.unionAll(fr)
+            return out_df
         return (edges.where(F.col("pred") == F.lit(spec))
-                .select("src_id", "dst_id"))
+                .select(*ends("src_id", "dst_id")))
 
     def closure_df(spec):
         # keyed by name or by the hashable NPS tuple — one doubling loop per
@@ -1362,57 +1375,50 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
             out = out.unionByName(f)
         return out
 
-    def reach_pairs(inv, spec, mod, const, const_is_obj):
+    def reach_pairs(inv, spec, mod, const, const_is_obj, var):
         """Constant-endpoint closure: ``(?x, p+, C)`` / ``(C, p+, ?x)`` (and
         the ``*`` forms) answered by directed reachability from the constant
         instead of materializing the FULL predicate closure and filtering one
         endpoint afterwards — output-bounded (|reachable| rows of state)
         where the generic path is closure-bounded. The result is the
-        identical solution SET: each reached node once (NULL included), and
-        ``*`` adds the zero-length (C, C) row exactly like the generic ident
-        arm filtered to C.
+        identical solution SET as the one column ``var``: each reached node
+        once (NULL included), and ``*`` adds the zero-length (C, C) row
+        exactly like the generic ident arm filtered to C.
 
-        Two paths, chosen by one measured collect of the lazily checkpointed
-        step adjacency (``smallgraph.small_arrow``):
+        Two paths, chosen by one measured collect of the step adjacency
+        (``smallgraph.small_arrow``), checkpointed lazily first unless its
+        rows are already in its plan (``smallgraph.reusable``):
 
         * up to ``smallgraph.KERNEL_ROWS`` arcs within the broadcast budget,
           that collect is the adjacency and the BFS runs vectorized on the
           driver (:func:`_reach_arrow`); the reached set comes back as a
           LocalRelation, whatever the depth;
-        * over either, a distributed frontier loop over the checkpoint the
-          collect materialized: per hop one equi-join of the frontier
-          against the key-partitioned adjacency, a distinct and a null-safe
-          anti-join against the settled nodes, checkpointed with the
-          emptiness check riding the checkpoint. If the frontier has not
-          drained after 128 hops it returns None and the caller falls back
-          to the generic closure — a pathologically deep chain is exactly
-          what log-round doubling is for."""
+        * over either, a distributed frontier loop over the frame the
+          collect read: per hop one equi-join of the frontier against the
+          key-partitioned adjacency, a distinct and a null-safe anti-join
+          against the settled nodes, checkpointed with the emptiness check
+          riding the checkpoint. If the frontier has not drained after 128
+          hops it returns None and the caller falls back to the generic
+          closure — a pathologically deep chain is exactly what log-round
+          doubling is for."""
         # follow edges forward from a constant subject, backward from a
         # constant object; an inverse step swaps the direction once more
-        head, tail = (("dst_id", "src_id") if inv != const_is_obj
-                      else ("src_id", "dst_id"))
-        step = step_pairs(spec).select(
-            F.col(head).alias("node"),
-            F.col(tail).alias("nbr")).localCheckpoint(eager=False)
+        step = reusable(step_pairs(spec, ("nbr", "node") if inv != const_is_obj
+                                   else ("node", "nbr")))
         arcs = small_arrow(step, KERNEL_ROWS)
         if arcs is not None:
             reached = _reach_arrow(arcs["node"], arcs["nbr"], const)
             if mod == "*":
                 reached = pc.unique(pa.concat_arrays(
                     [reached, pa.array([const], type=reached.type)]))
-            pairs = id_frame(spark, id_type, node=reached)
-        else:
-            pairs = reach_distributed(step, const)
-            if pairs is None:
-                return None
-            if mod == "*":
-                pairs = pairs.unionAll(
-                    id_frame(spark, id_type, node=[const])).distinct()
-        if const_is_obj:
-            return pairs.select(F.col("node").alias("src_id"),
-                                F.lit(const).cast(id_type).alias("dst_id"))
-        return pairs.select(F.lit(const).cast(id_type).alias("src_id"),
-                            F.col("node").alias("dst_id"))
+            return id_frame(spark, id_type, **{var: reached})
+        pairs = reach_distributed(step, const)
+        if pairs is None:
+            return None
+        if mod == "*":
+            pairs = pairs.unionAll(
+                id_frame(spark, id_type, node=[const])).distinct()
+        return pairs.select(F.col("node").alias(var))
 
     def reach_distributed(step, const):
         step = _key_repartition(step, "node").localCheckpoint(eager=False)
@@ -1435,25 +1441,26 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
         return run.settled if run.converged else None
 
     def compile_one(p):
+        """One pattern → ``(frame, names)``: a column per variable, named
+        without the ``?``, in the order of ``names``."""
         subj, pred_t, obj = p
         if _is_path(pred_t):
             # the pred slot is consumed by the path; match its (src, dst)
             # endpoint pairs like any other pattern
-            df = None
             seqs = _parse_path(pred_t)
+            const = obj if is_var(subj) else subj
             if (len(seqs) == 1 and len(seqs[0]) == 1
                     and seqs[0][0][2] in ("+", "*")
-                    and is_var(subj) != is_var(obj)):
-                inv, spec, mod = seqs[0][0]
-                df = reach_pairs(inv, spec, mod,
-                                 obj if is_var(subj) else subj,
-                                 const_is_obj=is_var(subj))
-            if df is None:
-                df = compile_path(pred_t,
-                                  [t for t in (subj, obj) if not is_var(t)])
+                    and is_var(subj) != is_var(obj) and const is not None):
+                var = (subj if is_var(subj) else obj)[1:]
+                df = reach_pairs(*seqs[0][0], const, is_var(subj), var)
+                if df is not None:
+                    return df, [var]
+            df = compile_path(pred_t,
+                              [t for t in (subj, obj) if not is_var(t)])
             terms = (("src_id", subj), ("dst_id", obj))
         else:
-            df = edges.select(*slots)
+            df = edges
             terms = tuple(zip(slots, p))
         seen = {}
         out = []
@@ -1467,7 +1474,7 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                     out.append(F.col(slot).alias(name))
             else:
                 df = df.where(F.col(slot) == F.lit(term))
-        return df.select(*out), set(seen)
+        return df.select(*out), list(seen)
 
     pstats = None
     if stats is not None:
@@ -1529,27 +1536,30 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
     def compile_group(pats):
         order = _order_patterns([estimate(p) for p in pats],
                                 [pat_vars(p) for p in pats])
-        result, have = compile_one(pats[order[0]])
+        result, cols = compile_one(pats[order[0]])
         for i in order[1:]:
             df, vs = compile_one(pats[i])
-            result = result.join(df, sorted(vs & set(have)))
-            have |= vs
-        return result, have
+            on = sorted(set(vs) & set(cols))
+            result = result.join(df, on)
+            cols = _using(cols, vs, on)
+        return result, cols
 
-    result, have = compile_group(patterns)
+    # ``cols``: the solutions' columns in the order Spark lays them out,
+    # kept here so the final projection runs only when it reorders
+    result, cols = compile_group(patterns)
     for g in union_groups:
         if not g:
             raise ValueError("a union group must not be empty")
-        gdf, gvars = compile_group(g)
+        gdf, gcols = compile_group(g)
         # SPARQL UNION: bag-merge of solution multisets; a variable absent
         # from one branch is unbound (NULL) in that branch's rows
         result = result.unionByName(gdf, allowMissingColumns=True)
-        have |= gvars
+        cols += [c for c in gcols if c not in cols]
     for sdf in (sub or []):
         if not isinstance(sdf, DataFrame):
             raise ValueError("sub takes solution DataFrames (inner-query "
                              f"results), got {type(sdf).__name__}")
-        shared = sorted(set(sdf.columns) & have)
+        shared = sorted(set(sdf.columns) & set(cols))
         if shared:
             # the spec's compatibility join on every shared variable
             result = result.join(sdf, shared)
@@ -1558,14 +1568,14 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
             # one-row aggregate-subquery idiom (documented small-side
             # contract; share a variable for anything row-proportional)
             result = result.crossJoin(F.broadcast(sdf))
-        have |= set(sdf.columns)
+        cols = _using(cols, sdf.columns, shared)
     if values is not None:
         if isinstance(values, dict):
             pairs = [(v, list(consts)) for v, consts in values.items()]
             for v, consts in pairs:
-                if v not in have:
+                if v not in cols:
                     raise ValueError(f"values variable {v!r} is not bound "
-                                     f"(bound: {sorted(have)})")
+                                     f"(bound: {sorted(cols)})")
                 if not consts:
                     raise ValueError(f"values for {v!r} must not be empty")
                 if any(c is None for c in consts):
@@ -1584,10 +1594,10 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
                 raise ValueError(
                     "values must be a {var: [consts]} dict or a "
                     "(vars, rows) pair") from None
-            missing = [v for v in vvars if v not in have]
+            missing = [v for v in vvars if v not in cols]
             if missing:
                 raise ValueError(f"values variables {missing} are not bound "
-                                 f"(bound: {sorted(have)})")
+                                 f"(bound: {sorted(cols)})")
             if not rows or any(len(r) != len(vvars) for r in rows):
                 raise ValueError("values rows must be non-empty and match "
                                  f"the variable list {vvars}")
@@ -1598,50 +1608,53 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
             # binding rows multiply matching solutions
             lit = edges.sparkSession.createDataFrame(rows, vvars)
             result = result.join(F.broadcast(lit), vvars)
+            cols = _using(cols, vvars, vvars)
     groups = [list(g) for g in (optional or [])]
     for g in groups:
         if not g:
             raise ValueError("an optional group must not be empty")
-        gdf, gvars = compile_group(g)
-        shared = sorted(gvars & have)
+        gdf, gcols = compile_group(g)
+        shared = sorted(set(gcols) & set(cols))
         if not shared:
             raise ValueError(
                 "an optional group must share ≥1 variable with the required "
-                f"patterns (group binds {sorted(gvars)}) — an unshared group "
+                f"patterns (group binds {sorted(gcols)}) — an unshared group "
                 "would be a cartesian product")
         result = result.join(gdf, shared, "left")
-        have |= gvars
+        cols = _using(cols, gcols, shared)
     for g in minus_groups:
         if not g:
             raise ValueError("a minus group must not be empty")
-        gdf, gvars = compile_group(g)
-        shared = sorted(gvars & have)
+        gdf, gcols = compile_group(g)
+        shared = sorted(set(gcols) & set(cols))
         if not shared:
             raise ValueError(
                 "a minus group must share ≥1 variable with the solutions "
-                f"(group binds {sorted(gvars)}) — SPARQL defines the "
+                f"(group binds {sorted(gcols)}) — SPARQL defines the "
                 "disjoint-domain case as a no-op, which is almost certainly "
                 "a query bug; split the query if you mean it")
         # MINUS variables never project into the output — anti-join only
         result = result.join(gdf, shared, "left_anti")
+        cols = _using(cols, [], shared)
     bind = dict(bind or {})
     for v, expr in bind.items():
-        if v in have:
+        if v in cols:
             raise ValueError(
-                f"bind would reassign {v!r} (bound: {sorted(have)}) — "
+                f"bind would reassign {v!r} (bound: {sorted(cols)}) — "
                 "SPARQL forbids BIND onto an in-scope variable")
         result = result.withColumn(
             v, F.expr(expr) if isinstance(expr, str) else expr)
-        have.add(v)
+        cols.append(v)
     for keep, g in exists_groups:
         kind = "exists" if keep else "not_exists"
         if not g:
             raise ValueError(f"a {kind} group must not be empty")
-        gdf, gvars = compile_group(g)
-        shared = sorted(gvars & have)
+        gdf, gcols = compile_group(g)
+        shared = sorted(set(gcols) & set(cols))
         if shared:
             result = result.join(gdf, shared,
                                  "left_semi" if keep else "left_anti")
+            cols = _using(cols, [], shared)
         else:
             # uncorrelated EXISTS: one boolean over the whole group — a
             # one-row broadcast flag (limit-1 bounds the group scan), the
@@ -1665,7 +1678,8 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
     for sdf in (sub or []):
         first_seen += [c for c in sdf.columns if c not in first_seen]
     first_seen += [v for v in bind if v not in first_seen]
-    result = result.select(*first_seen)
+    if cols != first_seen:
+        result = result.select(*first_seen)
     out_cols = first_seen
     if agg is not None or group_by is not None:
         if not agg:
@@ -1701,6 +1715,8 @@ def match_pattern(edges: DataFrame, patterns: list, distinct: bool = False,
             raise ValueError(
                 f"select must be a non-empty subset of the bound variables "
                 f"{out_cols}; unknown: {missing}")
+        if sel == out_cols:             # already the solutions' columns
+            sel = None
     sort_cols = None
     if order_by is not None:
         sort_cols = []

@@ -62,7 +62,7 @@ def local_frame(spark, table: pa.Table, schema: T.StructType) -> DataFrame:
     return df.coalesce(1) if table.num_rows <= ONE_PARTITION_ROWS else df
 
 
-def id_frame(spark, id_type: T.DataType, **cols) -> DataFrame:
+def id_frame(spark, id_type: T.DataType, /, **cols) -> DataFrame:
     """A literal frame of node-id columns, each a Python list or an Arrow
     array, built through :func:`local_frame`; a list-built frame would be a
     Python-RDD scan that pays a worker round trip per use."""
@@ -88,9 +88,8 @@ def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
     rows and measures them, so a frame whose size the optimizer cannot
     estimate (a list- or join-built one) is judged by its data. Under the
     off switch it returns None and runs no job. A caller that falls back to
-    a Spark loop over ``df`` should checkpoint ``df`` lazily first, so the
-    loop reads what this collect materialized instead of re-running its
-    plan."""
+    a Spark loop over ``df`` should probe ``reusable(df)`` (:func:`reusable`),
+    so the loop does not re-run the plan this collect already ran."""
     budget = broadcast_budget(df.sparkSession)
     if budget < 0:
         return None
@@ -98,6 +97,22 @@ def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
     if table.num_rows <= max_rows and table.nbytes <= budget:
         return table
     return None
+
+
+def reusable(df: DataFrame) -> DataFrame:
+    """``df`` in a form that a :func:`small_arrow` probe and a Spark loop
+    falling back from it can both read without running its plan twice.
+    A frame whose rows are already in its plan, i.e. whose optimized plan is
+    a LocalRelation alone or under one non-shuffling Repartition (a
+    :func:`local_frame` and any filter or projection of one), is returned as
+    it is: re-reading it runs nothing. Anything else (a file scan, a join, a
+    Python UDF, a list-built frame's RDD scan) is checkpointed lazily, so the
+    probe's collect materializes it and the loop reads those partitions."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    name = plan.nodeName()
+    if name == "Repartition" and not plan.shuffle():
+        name = plan.child().nodeName()
+    return df if name == "LocalRelation" else df.localCheckpoint(eager=False)
 
 
 def encode(src: pa.ChunkedArray, dst: pa.ChunkedArray):

@@ -57,6 +57,13 @@ def get_spark(app_name: str = "lingvo-spark-kg", cpus: int | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # off: every pyspark.sql.functions / Column call would otherwise walk
+        # the Python stack and make extra Py4J calls (session, conf, origin
+        # set and clear) to attach its call site to the plan, about half the
+        # driver's round trips when a lookup is planned. Analysis errors then carry no Python call site; pass
+        # this key as "true" in extra_conf (a static conf: before the session
+        # starts) to get it back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

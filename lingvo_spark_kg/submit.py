@@ -72,6 +72,9 @@ def main() -> None:
         "--conf", "spark.sql.adaptive.skewJoin.enabled=true",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
         "--conf", "spark.sql.shuffle.partitions=64",
+        # session.get_spark's default: the job's getOrCreate() would
+        # otherwise capture a Python call site on every Column call
+        "--conf", "spark.python.sql.dataFrameDebugging.enabled=false",
         job_path, args.workdir, str(args.n_docs),
     ]
     print(" ".join(cmd))

@@ -951,3 +951,44 @@ def test_shortest_path_counts_directed_hand_dag(spark):
         shortest_path_counts(df, df.select("src_id", "dst_id"))
     with pytest.raises(ValueError, match="non-empty"):
         shortest_path_counts(df, [])
+
+
+def test_match_pattern_columns_first_seen_under_every_operator(spark):
+    """The compiler tracks the solutions' column order in Python and projects
+    only when it differs from first-seen; joins move their keys first, so
+    every operator that joins must leave the documented order."""
+    from lingvo_spark_kg.operators.graph import match_pattern
+
+    df = _edges_df(spark, [(1, 2, "p"), (2, 3, "q"), (3, 4, "p"),
+                           (2, 5, "q"), (5, 6, "r"), (1, 3, "p")])
+    sub = spark.createDataFrame([(3, 7)], "c long, n long")
+    one = spark.createDataFrame([(9,)], "k long")
+    chain = [("?a", "p", "?b"), ("?b", "q", "?c")]
+    cases = [
+        (dict(patterns=chain), ["a", "b", "c"]),
+        (dict(patterns=[("?x", "p", "?y"), ("?z", "q", "?y")]),
+         ["x", "y", "z"]),
+        (dict(patterns=[("?a", "p", "?b")],
+              optional=[[("?b", "q", "?c"), ("?c", "r", "?d")]]),
+         ["a", "b", "c", "d"]),
+        (dict(patterns=[("?a", "p", "?b")], union=[[("?c", "q", "?a")]]),
+         ["a", "b", "c"]),
+        (dict(patterns=chain, minus=[[("?c", "r", "?z")]]), ["a", "b", "c"]),
+        (dict(patterns=chain, exists=[[("?c", "r", "?z")]]), ["a", "b", "c"]),
+        (dict(patterns=chain, not_exists=[[("?c", "p", "?z")]]),
+         ["a", "b", "c"]),
+        (dict(patterns=chain, values=(("c",), [(3,), (5,)])),
+         ["a", "b", "c"]),
+        (dict(patterns=chain, values={"b": [2]}), ["a", "b", "c"]),
+        (dict(patterns=chain, sub=[sub]), ["a", "b", "c", "n"]),
+        (dict(patterns=chain, sub=[one]), ["a", "b", "c", "k"]),
+        (dict(patterns=chain, bind={"s": "a + c"}), ["a", "b", "c", "s"]),
+        (dict(patterns=[(1, "p+", "?x"), ("?x", "q", "?y")]), ["x", "y"]),
+        (dict(patterns=[("?y", "q", "?x"), (1, "p*", "?x")]), ["y", "x"]),
+        (dict(patterns=chain, select=["c", "a"]), ["c", "a"]),
+        (dict(patterns=chain, select=["a", "b", "c"]), ["a", "b", "c"]),
+    ]
+    for kw, want in cases:
+        out = match_pattern(df, **kw)
+        assert out.columns == want, kw
+        assert len(out.collect()) > 0, kw

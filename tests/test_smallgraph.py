@@ -8,6 +8,7 @@ import itertools
 
 import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lingvo_spark_kg.operators import canonicalize, smallgraph
 
@@ -88,3 +89,86 @@ def test_cc_oracle_rows_run_the_driver_kernel(spark, sf_dir, cc_kernel_calls):
     assert len(cc_kernel_calls) == 1
     e.q_kg_edges_incremental(spark, sf_dir)
     assert len(cc_kernel_calls) == 3
+
+
+_EDGES_SCHEMA = T.StructType([T.StructField("src_id", T.LongType()),
+                              T.StructField("pred", T.StringType()),
+                              T.StructField("dst_id", T.LongType())])
+
+
+def _chain_edges(n: int = 12) -> pa.Table:
+    """A ``p`` chain 0 → 1 → … → n with a ``q`` arc off every node."""
+    src = list(range(n)) * 2
+    return pa.table({"src_id": pa.array(src, pa.int64()),
+                     "pred": ["p"] * n + ["q"] * n,
+                     "dst_id": pa.array(list(range(1, n + 1))
+                                        + [100 + i for i in range(n)],
+                                        pa.int64())})
+
+
+def _checkpoint_calls(monkeypatch) -> list:
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        calls.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return calls
+
+
+def test_reach_over_a_local_frame_probes_once_without_checkpoint(
+        spark, monkeypatch):
+    """A constant-endpoint ``p+`` over a driver-built edges frame (whose rows
+    are in its plan, as for the resident edges copy) is decided by its one
+    probe job and checkpoints nothing; over a list-built copy of the same
+    edges the step is checkpointed first, and both reach the same set."""
+    from lingvo_spark_kg.operators.graph import match_pattern
+
+    table = _chain_edges()
+    edges = smallgraph.local_frame(spark, table, _EDGES_SCHEMA)
+    calls = _checkpoint_calls(monkeypatch)
+    out, jobs = _jobs(spark, lambda: match_pattern(edges, [(3, "p+", "?x")]))
+    assert jobs == 1 and calls == []
+    got = {r["x"] for r in out.collect()}
+    assert got == set(range(4, 13))
+
+    listed = spark.createDataFrame(
+        list(zip(*(table[c].to_pylist() for c in table.column_names))),
+        _EDGES_SCHEMA)
+    assert {r["x"] for r in match_pattern(
+        listed, [(3, "p+", "?x")]).collect()} == got
+    assert len(calls) == 1
+
+
+def test_reusable_checkpoints_only_frames_not_in_their_plan(
+        spark, monkeypatch, tmp_path):
+    """A driver-built frame, and a filter or projection of it, is its own
+    reusable form; a parquet read, a Python UDF over the driver-built frame
+    and a list-built frame are checkpointed lazily (no job runs)."""
+    local = smallgraph.local_frame(spark, _chain_edges(), _EDGES_SCHEMA)
+    resident = [local,
+                local.where(F.col("pred") == "p").select("src_id", "dst_id"),
+                # over ONE_PARTITION_ROWS: a bare LocalRelation
+                smallgraph.local_frame(spark, _chain_edges(10_001),
+                                       _EDGES_SCHEMA)]
+    local.write.parquet(str(tmp_path / "edges"))
+
+    @F.udf("long")
+    def bump(v):
+        return v + 1
+
+    derived = [spark.read.parquet(str(tmp_path / "edges")),
+               local.select(bump("src_id").alias("src_id"), "dst_id"),
+               spark.createDataFrame([(1, 2)], "src_id long, dst_id long")]
+    calls = _checkpoint_calls(monkeypatch)
+    for df in resident:
+        assert smallgraph.reusable(df) is df
+    assert calls == []
+    (outs, jobs) = _jobs(spark, lambda: [smallgraph.reusable(df)
+                                         for df in derived])
+    assert calls == derived and jobs == 0
+    assert all(out is not df for out, df in zip(outs, derived))
